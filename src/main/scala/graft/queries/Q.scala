@@ -165,20 +165,20 @@ object QueryModule {
     * conflates JIT/page-cache warmup with build work. */
   private[graft] val buildTimes =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+  /** Charged only when the build RETURNS: a throwing build adds nothing,
+    * and the retry the Box's lazy runs next charges its own run alone. */
   private def recordBuild[T](key: String)(thunk: => T): T = {
     val t0 = System.nanoTime()
-    try thunk
-    finally {
-      val dt = (System.nanoTime() - t0) / 1e9
-      val artifact = key.indexOf(':') match {
-        case -1 => key
-        case i  => key.substring(0, i)
-      }
-      buildTimes.merge(artifact, dt, (a, b) => a + b)
+    val built = thunk
+    val artifact = key.indexOf(':') match {
+      case -1 => key
+      case i  => key.substring(0, i)
     }
+    buildTimes.merge(artifact, (System.nanoTime() - t0) / 1e9, (a, b) => a + b)
+    built
   }
 
-  /** Memoized-once box: the cache maps hold (stamp, Box) pairs whose
+  /** Memoized-once box: the artifact cache holds (stamp, Box) pairs whose
     * BUILD runs on first dereference OUTSIDE the ConcurrentHashMap bin
     * lock — compute() mapping functions must be short (its own javadoc
     * rule); running a multi-second Spark build inside one serialized
@@ -189,6 +189,21 @@ object QueryModule {
   private final class Box[T](thunk: () => T) {
     lazy val value: T = thunk()
   }
+
+  /** The one per-JVM artifact cache behind [[cachedIndex]],
+    * [[cachedBytes]] and [[cachedLocal]]: key → (generation stamp, Box).
+    * The stamp (tableStamp) rides in the VALUE, the schemaCache rule: a
+    * testdata regeneration REPLACES the entry in place, so superseded
+    * artifacts are never served and never stranded under dead stamped
+    * keys. Keys are artifact-prefixed ("kmarith:…", "ngrampairs:…"),
+    * so the three entry points never collide. */
+  private val artifactCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, Box[AnyRef])]()
+  private def cached[T <: AnyRef](key: String, stamp: String)(build: => T): T =
+    artifactCache.compute(key, (_, old) =>
+      if (old != null && old._1 == stamp) old
+      else (stamp, new Box[AnyRef](() => recordBuild(key)(build))))._2.value
+      .asInstanceOf[T]
 
   /** Per-JVM cache of side-written temp indexes, keyed by
     * (query, sfDir) with the table-generation stamp in the VALUE: the
@@ -210,8 +225,6 @@ object QueryModule {
     * registers in allIndexDirs at creation; a build that THROWS deletes
     * its partial dir immediately (nothing can be reading it yet) and
     * the lazy retries on next call. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Box[String])]()
   private val allIndexDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def rmTree(d: String): Unit = {
@@ -237,49 +250,32 @@ object QueryModule {
   private[queries] def cachedIndex(key: String, stamp: String)(
       build: String => Unit): String = {
     cleanupHook
-    indexCache.compute(key, { (_, old) =>
-      if (old != null && old._1 == stamp) old
-      else (stamp, new Box(() => recordBuild(key) {
-        val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
-        allIndexDirs.add(dir)
-        try build(dir)
-        catch { case e: Throwable =>
-          rmTree(dir); allIndexDirs.remove(dir); throw e
-        }
-        dir
-      }))
-    })._2.value
+    cached(key, stamp) {
+      val dir = java.nio.file.Files.createTempDirectory("graftidx").toString
+      allIndexDirs.add(dir)
+      try build(dir)
+      catch { case e: Throwable =>
+        rmTree(dir); allIndexDirs.remove(dir); throw e
+      }
+      dir
+    }
   }
 
-  /** Per-JVM cache for small CONSTANT-SIZE derived artifacts (a bloom
-    * sketch's bytes, a trained quantizer) — a static benchmark's sketch
-    * is built once per table generation, not once per query invocation.
-    * The generation `stamp` (tableStamp) rides in the VALUE, same as
-    * the schema cache: a regeneration REPLACES the entry in place, so
-    * superseded sketches are not stranded under dead stamped keys. */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Box[Array[Byte]])]()
+  /** Small CONSTANT-SIZE derived artifacts (a bloom sketch's bytes, a
+    * trained quantizer) — a static benchmark's sketch is built once per
+    * table generation, not once per query invocation. */
   private[queries] def cachedBytes(key: String, stamp: String)(
       build: => Array[Byte]): Array[Byte] =
-    bytesCache.compute(key, (_, old) =>
-      if (old != null && old._1 == stamp) old
-      else (stamp, new Box(() => recordBuild(key)(build))))._2.value
+    cached(key, stamp)(build)
 
-  /** cachedBytes' sibling for small PROVEN-BOUNDED localized relations
-    * (the token co-occurrence edge list: ≤ C(100,2) rows by vocabulary
-    * cap) — the nightly-built graph artifact every graph query reads,
-    * built once per (JVM, table generation) instead of once per query
-    * invocation. Same stamp-in-value replacement rule. Thread-visible
+  /** Small PROVEN-BOUNDED localized relations (the token co-occurrence
+    * edge list: ≤ C(100,2) rows by vocabulary cap) — the nightly-built
+    * graph artifact every graph query reads, built once per (JVM, table
+    * generation) instead of once per query invocation. Thread-visible
     * count of builds exposed for the build-once spec (counted when a
     * build actually RUNS, not when a box is created). */
-  private val localCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Box[AnyRef])]()
   private[graft] val localCacheBuilds = new java.util.concurrent.atomic.AtomicLong
   private[queries] def cachedLocal[T <: AnyRef](key: String, stamp: String)(
       build: => T): T =
-    localCache.compute(key, (_, old) =>
-      if (old != null && old._1 == stamp) old
-      else (stamp, new Box[AnyRef](() => recordBuild(key) {
-        localCacheBuilds.incrementAndGet(); build
-      })))._2.value.asInstanceOf[T]
+    cached(key, stamp) { localCacheBuilds.incrementAndGet(); build }
 }

@@ -1,21 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.eventstore.{Event, Fold, ProjRow}
 
 /** The live execution of an arbitrary (possibly non-commutative)
   * projection fold — photon's core operator (reference streams.clj:
   * 125-161: one event at a time, in order, state in an STM ref) mapped to
-  * flatMapGroupsWithState: state lives in Spark's state store, sharded by
+  * [[KeyedFold]]: state lives in Spark's state store, sharded by
   * stream_name, checkpointed (photon rebuilds state by re-folding the log
   * on restart, streams.clj:255-259; here the state store IS the resume
   * point — same capability, exactly-once).
   *
-  * Ordering: events are folded in order_id order within each micro-batch
-  * (in-batch sort below); across batches the append-only log guarantees
-  * arrival order. Failure semantics mirror the reference (streams.clj:
+  * Ordering: events are folded in order_id order under the
+  * [[KeyedFold]] in-order contract. Failure semantics mirror the reference (streams.clj:
   * 90-97): the first error freezes the state at the last good value and
   * the descriptor carries status=failed + the error.
   */
@@ -45,33 +44,31 @@ object StatefulProjection {
       implicit stateEnc: Encoder[ProjState[S]],
       encRow: Encoder[ProjRow[S]]): Dataset[ProjRow[S]] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.stream_name)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (stream: String, it: Iterator[Event], state: GroupState[ProjState[S]]) =>
-          val prev = state.getOption.getOrElse(ProjState(fold.initial, 0L, None))
-          var s = prev.value
-          var n = prev.processed
-          var ns = prev.stepNs
-          var err = prev.error
-          // in-batch replay order = order_id order (the reference's
-          // single-threaded in-order guarantee)
-          it.toArray.sortBy(_.order_id).foreach { e =>
-            if (err.isEmpty) {
-              val t0 = System.nanoTime()
-              try { s = fold.step(s, e); n += 1 }
-              catch { case ex if scala.util.control.NonFatal(ex) =>
-                err = Some(s"${ex.getClass.getName}: ${ex.getMessage}")
-              }
-              ns += System.nanoTime() - t0
-            }
-          }
-          state.update(ProjState(s, n, err, ns))
-          val bytes = Option(s).map(_.toString.getBytes("UTF-8").length.toLong)
-            .getOrElse(0L)
-          Iterator.single(ProjRow(fold.name, stream, s, n,
-            if (err.isDefined) "failed" else "running", err,
-            if (n > 0) ns / 1000.0 / n else 0.0, bytes))
+    // in-batch replay order = order_id order (the reference's
+    // single-threaded in-order guarantee)
+    KeyedFold(events)(_.stream_name).fold[ProjState[S], ProjRow[S]](
+      order = Some(Ordering.by(_.order_id)),
+      mode = OutputMode.Update(),
+      summary = { (stream, _, p, emit) =>
+        val bytes = Option(p.value).map(_.toString.getBytes("UTF-8").length.toLong)
+          .getOrElse(0L)
+        emit(ProjRow(fold.name, stream, p.value, p.processed,
+          if (p.error.isDefined) "failed" else "running", p.error,
+          if (p.processed > 0) p.stepNs / 1000.0 / p.processed else 0.0, bytes))
+        p
+      }) { (_, prev, e, _) =>
+      val p = prev.getOrElse(ProjState(fold.initial, 0L, None))
+      if (p.error.isDefined) p // the first error froze the state
+      else {
+        val t0 = System.nanoTime()
+        try {
+          val v = fold.step(p.value, e)
+          ProjState(v, p.processed + 1, None, p.stepNs + System.nanoTime() - t0)
+        } catch { case ex if scala.util.control.NonFatal(ex) =>
+          p.copy(error = Some(s"${ex.getClass.getName}: ${ex.getMessage}"),
+            stepNs = p.stepNs + System.nanoTime() - t0)
+        }
       }
+    }
   }
 }

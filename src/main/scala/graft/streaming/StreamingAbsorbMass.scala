@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live absorbing-chain mass — the 24th streaming twin, incremental
   * over x_markov_absorb's LIVE columns: per event type, how many
@@ -22,17 +21,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * structural fact that makes the batch chain substochastic).
   *
   * State per user is ONE event type string ([[StreamingPaths]]'s
-  * constant-bytes discipline, one slot smaller); in-order delivery per
-  * user is the same contract as the other live folds, with each
-  * batch's group sorted by (ts_us, event_id) before folding — the
+  * constant-bytes discipline, one slot smaller), folded under the
+  * [[KeyedFold]] in-order contract sorted by (ts_us, event_id) — the
   * batch query's own lead-window order.
   *
   * Trust chain: the batch x_markov_absorb is oracle-hash-matched, so
   * the parity spec's equality pins stream ≡ batch ≡ DuckDB for the
   * live mass columns across micro-batch splits. At 100 TB: state is
-  * |users| × one string (flatMapGroupsWithState shards it across
-  * executors); emissions are two tiny rows per event into whatever
-  * counting sink the deployment already runs. */
+  * |users| × one string (sharded by user across executors);
+  * emissions are two tiny rows per event into whatever counting sink
+  * the deployment already runs. */
 object StreamingAbsorbMass {
 
   final case class LastType(t: String)
@@ -42,23 +40,14 @@ object StreamingAbsorbMass {
   /** events: (user_id, ts_us, event_id, event_type). */
   def emissions(events: DataFrame): Dataset[MassHit] = {
     import events.sparkSession.implicits._
-    events.select("user_id", "ts_us", "event_id", "event_type")
+    val rows = events.select("user_id", "ts_us", "event_id", "event_type")
       .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LastType, MassHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[LastType]) =>
-          var last = state.getOption.map(_.t).orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[MassHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, _, _, t) =>
-            out += MassHit("arr", t)
-            if (last != null) out += MassHit("out", last)
-            last = t
-          }
-          state.update(LastType(last))
-          out.iterator
-      }
+    KeyedFold(rows)(_._1).fold[LastType, MassHit](
+        order = Some(Ordering.by(r => (r._2, r._3)))) { (_, prev, r, emit) =>
+      emit(MassHit("arr", r._4))
+      prev.map(_.t).filter(_ != null).foreach(last => emit(MassHit("out", last)))
+      LastType(r._4)
+    }
   }
 
   /** Fold a table of emissions into the batch query's live columns

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live last-touch revenue attribution — the incremental twin of
   * x_attribution: as events stream in, each user's most recent
@@ -16,9 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * millions of events grows state not at all, the same bot-proofness
   * the batch query gets from its last-ignoreNulls window.
   *
-  * In-order delivery per user across batches (same contract as the
-  * other live folds); within a batch the group is sorted by
-  * (ts_us, event_id) — the batch window's exact order.
+  * Folded under the [[KeyedFold]] in-order contract, sorted by
+  * (ts_us, event_id) within a batch — the batch window's exact order.
   */
 object StreamingAttribution {
 
@@ -32,24 +30,17 @@ object StreamingAttribution {
     * ts_us = epoch micros (the batch query's ordering key). */
   def credits(events: DataFrame): Dataset[Credit] = {
     import events.sparkSession.implicits._
-    events.select($"user_id".cast("long"), $"event_id".cast("long"),
+    val rows = events.select($"user_id".cast("long"), $"event_id".cast("long"),
         $"ts_us".cast("long"), $"event_type", $"value".cast("double"))
       .as[(Long, Long, Long, String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[String, Credit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Long, Long, String, Double)],
-         state: GroupState[String]) =>
-          var ch = state.getOption.getOrElse("")
-          val out = scala.collection.mutable.ArrayBuffer.empty[Credit]
-          rows.toSeq.sortBy(r => (r._3, r._2)).foreach {
-            case (_, eid, _, et, v) =>
-              if (et == "purchase")
-                out += Credit(user, eid, if (ch.isEmpty) "direct" else ch, v)
-              else ch = et
-          }
-          if (ch.nonEmpty) state.update(ch)
-          out.iterator
-      }
+    KeyedFold(rows)(_._1).fold[String, Credit](
+        order = Some(Ordering.by(r => (r._3, r._2)))) { (user, prev, r, emit) =>
+      val (_, eid, _, et, v) = r
+      val ch = prev.getOrElse("")
+      if (et == "purchase") {
+        emit(Credit(user, eid, if (ch.isEmpty) "direct" else ch, v))
+        ch
+      } else et
+    }
   }
 }

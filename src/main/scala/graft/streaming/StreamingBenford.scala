@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{expr, lit}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live Benford first-digit screen — the 33rd streaming twin,
   * incremental over x_value_benford: the fraud/unit-mix audit as a
@@ -18,7 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * 9-long histogram (the batch query is a 9-row GLOBAL read — there
   * is nothing to shard). Declared cost shape: the single group
   * receives the micro-batch's digit rows; Structured Streaming
-  * forbids an aggregate ahead of flatMapGroupsWithState in one query,
+  * forbids an aggregate ahead of a stateful fold in one query,
   * so at 100 TB the production topology is two stages (a per-batch
   * (digit, count) rollup streamed into this fold) — the fold itself
   * already consumes (digit, weight) rows unchanged, so that split is
@@ -44,26 +43,25 @@ object StreamingBenford {
   /** events: one `cents` column (exact money integer). */
   def profile(events: DataFrame): Dataset[BenfordRow] = {
     import events.sparkSession.implicits._
-    events.select($"cents".cast("long"))
+    val rows = events.select($"cents".cast("long"))
       .where($"cents" >= 1L)
       .select(expr("CAST(substring(CAST(cents AS STRING), 1, 1) AS BIGINT)")
         .as("digit"), lit(1L).as("bn"))
       .as[(Long, Long)]
-      .groupByKey(_ => 0)
-      .flatMapGroupsWithState[BenfordState, BenfordRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Int, rows: Iterator[(Long, Long)],
-         state: GroupState[BenfordState]) =>
-          val st = state.getOption.getOrElse(BenfordState(Array.fill(9)(0L)))
-          val n = st.n.clone()
-          rows.foreach { case (d, c) => n((d - 1L).toInt) += c }
-          state.update(BenfordState(n))
+    KeyedFold(rows)(_ => 0).fold[BenfordState, BenfordRow](
+        summary = { (_, _, st, emit) =>
+          val n = st.n
           val total = n.sum
-          (0 until 9).iterator.filter(i => n(i) > 0L).map { i =>
+          (0 until 9).filter(i => n(i) > 0L).foreach { i =>
             val share = n(i) * 10000L / total
-            BenfordRow(i + 1L, n(i), share, expected(i),
-              math.abs(share - expected(i)))
+            emit(BenfordRow(i + 1L, n(i), share, expected(i),
+              math.abs(share - expected(i))))
           }
-      }
+          st
+        }) { (_, prev, r, _) =>
+      val n = prev.fold(Array.fill(9)(0L))(_.n.clone())
+      n((r._1 - 1L).toInt) += r._2
+      BenfordState(n)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live bot-burstiness screening — the incremental twin of x_bot_burst:
   * as events stream in, each user's inter-event gaps accumulate into
@@ -16,9 +15,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * abuse case x_bot_burst screens for (a bot firing millions of events)
   * grows state not at all.
   *
-  * In-order delivery per user across batches (same contract as the
-  * other live folds); within a batch the group is sorted by
-  * (ms, event_id) — the batch window's exact order.
+  * Folded under the [[KeyedFold]] in-order contract, sorted by
+  * (ms, event_id) within a batch — the batch window's exact order.
   */
 object StreamingBurst {
 
@@ -34,30 +32,26 @@ object StreamingBurst {
   /** events: (user_id, event_id, ms) — ms = epoch millis. */
   def stats(events: DataFrame): Dataset[BurstStat] = {
     import events.sparkSession.implicits._
-    events.select($"user_id".cast("long"), $"event_id".cast("long"),
+    val rows = events.select($"user_id".cast("long"), $"event_id".cast("long"),
         $"ms".cast("long"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BurstState, BurstStat](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[BurstState]) =>
-          var s = state.getOption.getOrElse(
-            BurstState(Long.MinValue, 0L, 0L, Long.MaxValue))
-          val before = s.nGaps
-          rows.toSeq.sortBy(r => (r._3, r._2)).foreach { case (_, _, ms) =>
-            if (s.lastMs != Long.MinValue) {
-              val gap = ms - s.lastMs
-              s = BurstState(ms, s.nGaps + 1L,
-                s.nBurst + (if (gap < 600000L) 1L else 0L),
-                math.min(s.minGap, gap))
-            } else s = s.copy(lastMs = ms)
-          }
-          state.update(s)
-          if (s.nGaps > before)
-            Iterator.single(BurstStat(user, s.nGaps, s.nBurst, s.minGap,
+    KeyedFold(rows)(_._1).fold[BurstState, BurstStat](
+        order = Some(Ordering.by(r => (r._3, r._2))),
+        // one snapshot per user that gained a gap in this batch
+        summary = { (user, before, s, emit) =>
+          if (s.nGaps > before.fold(0L)(_.nGaps))
+            emit(BurstStat(user, s.nGaps, s.nBurst, s.minGap,
               s.nBurst * 10000L / s.nGaps))
-          else Iterator.empty
+          s
+        }) { (_, prev, r, _) =>
+      val ms = r._3
+      prev match {
+        case None => BurstState(ms, 0L, 0L, Long.MaxValue)
+        case Some(s) =>
+          val gap = ms - s.lastMs
+          BurstState(ms, s.nGaps + 1L,
+            s.nBurst + (if (gap < 600000L) 1L else 0L), math.min(s.minGap, gap))
       }
+    }
   }
 }

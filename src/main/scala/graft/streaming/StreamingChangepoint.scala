@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live twin of x_changepoint: per event type, the CUSUM mean-shift
   * changepoint of the daily count series, re-evaluated as each batch of
@@ -39,22 +38,14 @@ object StreamingChangepoint {
     * with fewer than 2 observed days emit nothing (no split point). */
   def points(rollup: DataFrame): Dataset[CpPoint] = {
     import rollup.sparkSession.implicits._
-    rollup.select($"event_type", $"day".cast("long"), $"c".cast("long"))
+    val rows = rollup.select($"event_type", $"day".cast("long"), $"c".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[CpState, CpPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[CpState]) =>
-          var counts = state.getOption.map(_.counts).getOrElse(Map.empty[Long, Long])
-          rows.foreach { case (_, day, c) =>
-            counts = counts.updated(day, counts.getOrElse(day, 0L) + c)
-          }
-          state.update(CpState(counts))
+    KeyedFold(rows)(_._1).fold[CpState, CpPoint](
+        summary = { (typ, _, st, emit) =>
+          val counts = st.counts
           val days = counts.keys.toArray.sorted
           val d = days.length.toLong
-          if (d < 2) Iterator.empty
-          else {
+          if (d >= 2) {
             val t = counts.valuesIterator.sum
             var s = 0L
             var bestC = -1L
@@ -68,8 +59,12 @@ object StreamingChangepoint {
               k += 1
               i += 1
             }
-            Iterator.single(CpPoint(typ, bestDay, bestC, d, t))
+            emit(CpPoint(typ, bestDay, bestC, d, t))
           }
-      }
+          st
+        }) { (_, prev, r, _) =>
+      val counts = prev.fold(Map.empty[Long, Long])(_.counts)
+      CpState(counts.updated(r._2, counts.getOrElse(r._2, 0L) + r._3))
+    }
   }
 }

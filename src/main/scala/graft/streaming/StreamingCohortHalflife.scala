@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live per-cohort retention decay — the 35th streaming twin,
   * incremental over x_cohort_halflife: as events arrive, each user's
@@ -20,14 +19,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * later emission ever needs a lookup), the
   * [[StreamingGrowthAccounting]] WeekSpan shape verbatim.
   *
-  * CONTRACT ENFORCEMENT: under per-user in-order delivery the week
+  * REORDERS ([[KeyedFold]] in-order contract): in order the week
   * sequence is non-decreasing; an arrival with w < lastW may carry an
-  * uncounted mid-span (user, week) whose offset hit is then silently
+  * uncounted mid-span (user, week) whose offset hit would be silently
   * missing (two longs cannot tell), and an arrival before the user's
   * true first week would have mis-seeded the cohort — both are the
-  * same below-water signature, counted in the accumulator
-  * [[emissions]] returns (zero ⇒ parity held; nonzero ⇒ void, loudly).
-  * w == lastW stays the benign same-week repeat.
+  * same below-water signature, counted as a reorder. w == lastW stays
+  * the benign same-week repeat.
   *
   * Trust chain: the batch x_cohort_halflife is oracle-hash-matched, so
   * the parity spec's equality pins stream ≡ batch ≡ DuckDB across
@@ -39,38 +37,26 @@ object StreamingCohortHalflife {
   final case class CohortHit(cls: String, fw: Long, k: Long)
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
-    * the hit stream paired with its own in-order-contract accumulator
-    * (the [[StreamingGrowthAccounting.emissions]] pairing rule). */
+    * the hit stream paired with its own reorder accumulator
+    * ([[KeyedFold.Keyed.foldInOrder]]). */
   def emissions(events: DataFrame)
       : (Dataset[CohortHit], org.apache.spark.util.LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.cohorthalflife.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamingGrowthAccounting.WeekSpan, CohortHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[StreamingGrowthAccounting.WeekSpan]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[CohortHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            val w = ms / 604800000L
-            if (st == null) {
-              out += CohortHit("cohort", w, 0L)
-              st = StreamingGrowthAccounting.WeekSpan(w, w)
-            } else if (w > st.lastW) {
-              out += CohortHit("offset", st.firstW, w - st.firstW)
-              st = st.copy(lastW = w)
-            } else if (w < st.lastW) {
-              oooAcc.add(1L) // reorder: surfaced, never silent
-            }
-          }
-          state.update(st)
-          out.iterator
+    val rows = events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)]
+    KeyedFold(rows)(_._1).foldInOrder[StreamingGrowthAccounting.WeekSpan, CohortHit](
+        "graft.cohorthalflife.outOfOrderArrivals", Ordering.by(r => (r._2, r._3)))(
+        (st, r) => r._2 / 604800000L < st.lastW) { (_, prev, r, emit) =>
+      val w = r._2 / 604800000L
+      prev match {
+        case None =>
+          emit(CohortHit("cohort", w, 0L))
+          StreamingGrowthAccounting.WeekSpan(w, w)
+        case Some(st) if w > st.lastW =>
+          emit(CohortHit("offset", st.firstW, w - st.firstW))
+          st.copy(lastW = w)
+        case Some(st) => st // w == lastW: the benign same-week repeat
       }
-    (hits, oooAcc)
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

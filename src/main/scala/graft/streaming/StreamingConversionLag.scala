@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live view→purchase conversion lag — the 36th streaming twin,
   * incremental over x_conversion_lag: each user emits AT MOST ONE lag
@@ -10,7 +9,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * arrives; any counting sink plus the batch ladder tail then
   * reproduces the six-rung lag table exactly.
   *
-  * Append-only by construction: under per-user in-order delivery the
+  * Append-only by construction: under the [[KeyedFold]] in-order
+  * contract per user the
   * first 'view' arrival IS min(view ms) and the first 'purchase'
   * arrival with ms > that IS the batch's min qualifying purchase, so
   * the single emitted lag is decided at emission time and never
@@ -25,9 +25,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State per user is three longs' worth (first-view ms, a done flag,
   * last seen ms); the fold reads only 'view'/'purchase' rows (the two
   * types the batch query reads — filtered inside, so the caller can
-  * hand it the raw event stream). In-order-contract violations
-  * (ms < lastMs) increment the accumulator [[emissions]] returns and
-  * fold nothing — surfaced, never silent.
+  * hand it the raw event stream). An arrival with ms < lastMs is a
+  * reorder: counted, not folded.
   *
   * Trust chain: the batch x_conversion_lag is oracle-hash-matched, so
   * the parity spec's equality pins stream ≡ batch ≡ DuckDB across
@@ -41,42 +40,26 @@ object StreamingConversionLag {
   final case class LagHit(lag_ms: Long)
 
   /** events: (user_id, event_type, ts_ms, event_id). Returns the hit
-    * stream paired with its own in-order-contract accumulator (the
-    * [[StreamingGrowthAccounting.emissions]] pairing rule). */
+    * stream paired with its own reorder accumulator
+    * ([[KeyedFold.Keyed.foldInOrder]]). */
   def emissions(events: DataFrame)
       : (Dataset[LagHit], org.apache.spark.util.LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.conversionlag.outOfOrderArrivals")
-    val hits = events
+    val rows = events
       .select("user_id", "event_type", "ts_ms", "event_id")
       .where(col("event_type").isin("view", "purchase"))
       .as[(Long, String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[ConvState, LagHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, String, Long, Long)],
-         state: GroupState[ConvState]) =>
-          var st = state.getOption.getOrElse(ConvState(-1L, false, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[LagHit]
-          rows.toSeq.sortBy(r => (r._3, r._4)).foreach { case (_, t, ms, _) =>
-            if (ms < st.lastMs) {
-              oooAcc.add(1L) // reorder: surfaced, never silent
-            } else {
-              if (t == "view" && st.viewMs < 0L)
-                st = st.copy(viewMs = ms)
-              else if (t == "purchase" && !st.done && st.viewMs >= 0L &&
-                  ms > st.viewMs) {
-                out += LagHit(ms - st.viewMs)
-                st = st.copy(done = true)
-              }
-              st = st.copy(lastMs = ms)
-            }
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    KeyedFold(rows)(_._1).foldInOrder[ConvState, LagHit](
+        "graft.conversionlag.outOfOrderArrivals", Ordering.by(r => (r._3, r._4)))(
+        (st, r) => r._3 < st.lastMs) { (_, prev, r, emit) =>
+      val (_, t, ms, _) = r
+      val st = prev.getOrElse(ConvState(-1L, false, -1L))
+      (if (t == "view" && st.viewMs < 0L) st.copy(viewMs = ms)
+      else if (t == "purchase" && !st.done && st.viewMs >= 0L && ms > st.viewMs) {
+        emit(LagHit(ms - st.viewMs))
+        st.copy(done = true)
+      } else st).copy(lastMs = ms)
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

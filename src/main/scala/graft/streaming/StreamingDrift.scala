@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live distribution-shift alarm — the incremental twin of x_drift_tvd:
   * events stream in bucketed by epoch week, each week's running
@@ -32,18 +31,11 @@ object StreamingDrift {
     import events.sparkSession.implicits._
     val btot = baseline.values.sum
     require(btot > 0, "baseline mix must be non-empty")
-    events.select($"week_idx".cast("long"), $"event_type")
+    val rows = events.select($"week_idx".cast("long"), $"event_type")
       .as[(Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[DriftState, Drift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (week: Long, rows: Iterator[(Long, String)],
-         state: GroupState[DriftState]) =>
-          var m = state.getOption.map(_.counts).getOrElse(Map.empty[String, Long])
-          rows.foreach { case (_, et) =>
-            m = m.updated(et, m.getOrElse(et, 0L) + 1L)
-          }
-          state.update(DriftState(m))
+    KeyedFold(rows)(_._1).fold[DriftState, Drift](
+        summary = { (week, _, st, emit) =>
+          val m = st.counts
           val wtot = m.valuesIterator.sum
           // the batch query's inner join: only types present in BOTH the
           // baseline and the week contribute a term
@@ -55,7 +47,11 @@ object StreamingDrift {
               ((BigInt(m(t)) * btot - BigInt(bc) * wtot).abs * 10000) /
                 (BigInt(wtot) * btot)
           }.sum / 2).toLong
-          Iterator.single(Drift(week, wtot, tvd))
-      }
+          emit(Drift(week, wtot, tvd))
+          st
+        }) { (_, prev, r, _) =>
+      val m = prev.fold(Map.empty[String, Long])(_.counts)
+      DriftState(m.updated(r._2, m.getOrElse(r._2, 0L) + 1L))
+    }
   }
 }

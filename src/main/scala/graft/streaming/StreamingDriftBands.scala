@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live banded drift (PSI + χ²) — the 29th streaming twin, closing the
   * drift family's live side: TVD ([[StreamingDrift]]), location
@@ -79,55 +78,46 @@ object StreamingDriftBands {
     import events.sparkSession.implicits._
     val sides = build(early)
     require(sides.nonEmpty, "early reference must be non-empty")
-    events.select($"event_type", $"cents".cast("long"))
+    val rows = events.select($"event_type", $"cents".cast("long"))
       .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[BandState, BandsDrift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (t: String, rows: Iterator[(String, Long)],
-         state: GroupState[BandState]) =>
-          sides.get(t) match {
-            case None => Iterator.empty // no early mass: the batch drop rule
-            case Some(s) =>
-              val st = state.getOption
-                .getOrElse(BandState(Array.fill(10)(0L), 0L))
-              val cl = st.cl.clone()
-              var nl = st.nLate
-              rows.foreach { case (_, v) =>
-                val p = java.util.Arrays.binarySearch(s.cents, v)
-                val i = if (p >= 0) p else -(p + 1) - 1 // level ≤ v, or -1
-                val cumE = if (i < 0) 0L else s.cumLe(i)
-                cl(bin(cumE, s.ne)) += 1L
-                nl += 1L
-              }
-              state.update(BandState(cl, nl))
-              // both statistics over the present bands, with the batch
-              // queries' own double operand trees
-              var nBins = 0L
-              var psi = 0.0
-              var chi2 = 0.0
-              var b = 0
-              while (b < 10) {
-                val ceB = s.ce(b)
-                val clB = cl(b)
-                if (ceB > 0L || clB > 0L) {
-                  nBins += 1L
-                  val pl = math.max(clB.toDouble / nl, 0.0001)
-                  val pe = math.max(ceB.toDouble / s.ne, 0.0001)
-                  psi += (pl - pe) * math.log(pl / pe)
-                  // BigInt cross term (r18 wide spelling, DriftArith)
-                  val cross = (BigInt(ceB) * nl - BigInt(clB) * s.ne).toDouble
-                  chi2 += cross * cross * (s.ne + nl) /
-                    (s.ne.toDouble * nl * (ceB + clB))
-                }
-                b += 1
-              }
-              def r4(x: Double): Double =
-                BigDecimal(x).setScale(4,
-                  BigDecimal.RoundingMode.HALF_UP).toDouble
-              Iterator.single(BandsDrift(t, s.ne, nl, nBins, r4(psi),
-                nBins - 1L, r4(chi2)))
+      .filter(r => sides.contains(r._1)) // no early mass: the batch drop rule
+    KeyedFold(rows)(_._1).fold[BandState, BandsDrift](
+        summary = { (t, _, st, emit) =>
+          val s = sides(t)
+          val cl = st.cl
+          val nl = st.nLate
+          // both statistics over the present bands, with the batch
+          // queries' own double operand trees
+          var nBins = 0L
+          var psi = 0.0
+          var chi2 = 0.0
+          var b = 0
+          while (b < 10) {
+            val ceB = s.ce(b)
+            val clB = cl(b)
+            if (ceB > 0L || clB > 0L) {
+              nBins += 1L
+              val pl = math.max(clB.toDouble / nl, 0.0001)
+              val pe = math.max(ceB.toDouble / s.ne, 0.0001)
+              psi += (pl - pe) * math.log(pl / pe)
+              // BigInt cross term (r18 wide spelling, DriftArith)
+              val cross = (BigInt(ceB) * nl - BigInt(clB) * s.ne).toDouble
+              chi2 += cross * cross * (s.ne + nl) /
+                (s.ne.toDouble * nl * (ceB + clB))
+            }
+            b += 1
           }
-      }
+          def r4(x: Double): Double =
+            BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+          emit(BandsDrift(t, s.ne, nl, nBins, r4(psi), nBins - 1L, r4(chi2)))
+          st
+        }) { (t, prev, r, _) =>
+      val s = sides(t)
+      val cl = prev.fold(Array.fill(10)(0L))(_.cl.clone())
+      val p = java.util.Arrays.binarySearch(s.cents, r._2)
+      val i = if (p >= 0) p else -(p + 1) - 1 // level ≤ v, or -1
+      cl(bin(if (i < 0) 0L else s.cumLe(i), s.ne)) += 1L
+      BandState(cl, prev.fold(0L)(_.nLate) + 1L)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live Cramér–von Mises drift — the 37th streaming twin, keeping the
   * drift family's live side COMPLETE as the batch side grows (the r16
@@ -57,29 +56,8 @@ object StreamingDriftCvm {
   def drift(events: DataFrame, early: Map[String, Seq[(Long, Long)]])
       : Dataset[CvmDrift] = {
     import events.sparkSession.implicits._
-    val sides = StreamingDriftKs.build(early)
-    require(sides.nonEmpty, "early reference must be non-empty")
-    events.select($"event_type", $"cents".cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamingDriftKs.KsState, CvmDrift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (t: String, rows: Iterator[(String, Long)],
-         state: GroupState[StreamingDriftKs.KsState]) =>
-          sides.get(t) match {
-            case None => Iterator.empty // no early mass: the batch drop rule
-            case Some(s) =>
-              var st = state.getOption
-                .getOrElse(StreamingDriftKs.KsState(Map.empty, 0L))
-              rows.foreach { case (_, v) =>
-                st = StreamingDriftKs.KsState(
-                  st.late.updated(v, st.late.getOrElse(v, 0L) + 1L),
-                  st.nLate + 1L)
-              }
-              state.update(st)
-              Iterator.single(CvmDrift(t, s.ne, st.nLate,
-                stat(s, st.late, st.nLate)))
-          }
-      }
+    StreamingDriftKs.lateFold(events, early) { (t, s, st) =>
+      CvmDrift(t, s.ne, st.nLate, stat(s, st.late, st.nLate))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live Wasserstein-1 (earth-mover) drift — the 34th streaming twin,
   * incremental over x_drift_emd and the KS twin's literal sibling: the
@@ -70,32 +69,12 @@ object StreamingDriftEmd {
   def drift(events: DataFrame, early: Map[String, Seq[(Long, Long)]])
       : Dataset[EmdDrift] = {
     import events.sparkSession.implicits._
-    val sides = StreamingDriftKs.build(early)
-    require(sides.nonEmpty, "early reference must be non-empty")
-    events.select($"event_type", $"cents".cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamingDriftKs.KsState, EmdDrift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (t: String, rows: Iterator[(String, Long)],
-         state: GroupState[StreamingDriftKs.KsState]) =>
-          sides.get(t) match {
-            case None => Iterator.empty // no early mass: the batch drop rule
-            case Some(s) =>
-              var st = state.getOption
-                .getOrElse(StreamingDriftKs.KsState(Map.empty, 0L))
-              rows.foreach { case (_, v) =>
-                st = StreamingDriftKs.KsState(
-                  st.late.updated(v, st.late.getOrElse(v, 0L) + 1L),
-                  st.nLate + 1L)
-              }
-              state.update(st)
-              val tot = w1(s, st.late, st.nLate)
-              val d = BigInt(s.ne) * st.nLate
-              // w1_bp ≤ range(cents)·10⁴ — the narrowing is total
-              Iterator.single(EmdDrift(t, s.ne, st.nLate,
-                ((tot / d) * 10000 + ((tot % d) * 10000) / d).toLong))
-          }
-      }
+    StreamingDriftKs.lateFold(events, early) { (t, s, st) =>
+      val tot = w1(s, st.late, st.nLate)
+      val d = BigInt(s.ne) * st.nLate
+      // w1_bp ≤ range(cents)·10⁴ — the narrowing is total
+      EmdDrift(t, s.ne, st.nLate,
+        ((tot / d) * 10000 + ((tot % d) * 10000) / d).toLong)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live Jensen–Shannon drift — the 30th streaming twin; with it every
   * drift-family member has a live side (TVD [[StreamingDrift]], MW
@@ -51,50 +50,42 @@ object StreamingDriftJs {
     import events.sparkSession.implicits._
     val sides = build(early)
     require(sides.nonEmpty, "early reference must be non-empty")
-    events.select($"event_type", $"cents".cast("long"))
+    val rows = events.select($"event_type", $"cents".cast("long"))
       .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[JsState, JsDrift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (t: String, rows: Iterator[(String, Long)],
-         state: GroupState[JsState]) =>
-          sides.get(t) match {
-            case None => Iterator.empty // no early mass: the batch drop rule
-            case Some(s) =>
-              var st = state.getOption.getOrElse(JsState(Map.empty, 0L))
-              rows.foreach { case (_, v) =>
-                st = JsState(
-                  st.late.updated(v, st.late.getOrElse(v, 0L) + 1L),
-                  st.nLate + 1L)
-              }
-              state.update(st)
-              val nl = st.nLate
-              val merged = (s.levels ++ st.late.keysIterator).distinct.sorted
-              var jsd = 0.0
-              merged.foreach { v =>
-                val ea = s.eq.getOrElse(v, 0L)
-                val la = st.late.getOrElse(v, 0L)
-                // BigInt mixture terms (r18 wide spelling): ea·nl
-                // wrapped silently in Long past ne·nl ≈ 9.2·10¹⁸; the
-                // double images are the float envelope, unchanged
-                val mix = (BigInt(ea) * nl + BigInt(la) * s.ne).toDouble
-                // the batch per-level combined term, operand for operand
-                val tp =
-                  if (ea > 0L)
-                    0.5 * (ea.toDouble / s.ne) *
-                      math.log((BigInt(2) * ea * nl).toDouble / mix)
-                  else 0.0
-                val tq =
-                  if (la > 0L)
-                    0.5 * (la.toDouble / nl) *
-                      math.log((BigInt(2) * la * s.ne).toDouble / mix)
-                  else 0.0
-                jsd += tp + tq
-              }
-              val r4 = BigDecimal(jsd).setScale(4,
-                BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
-              Iterator.single(JsDrift(t, s.ne, nl, r4))
+      .filter(r => sides.contains(r._1)) // no early mass: the batch drop rule
+    KeyedFold(rows)(_._1).fold[JsState, JsDrift](
+        summary = { (t, _, st, emit) =>
+          val s = sides(t)
+          val nl = st.nLate
+          val merged = (s.levels ++ st.late.keysIterator).distinct.sorted
+          var jsd = 0.0
+          merged.foreach { v =>
+            val ea = s.eq.getOrElse(v, 0L)
+            val la = st.late.getOrElse(v, 0L)
+            // BigInt mixture terms (r18 wide spelling): ea·nl
+            // wrapped silently in Long past ne·nl ≈ 9.2·10¹⁸; the
+            // double images are the float envelope, unchanged
+            val mix = (BigInt(ea) * nl + BigInt(la) * s.ne).toDouble
+            // the batch per-level combined term, operand for operand
+            val tp =
+              if (ea > 0L)
+                0.5 * (ea.toDouble / s.ne) *
+                  math.log((BigInt(2) * ea * nl).toDouble / mix)
+              else 0.0
+            val tq =
+              if (la > 0L)
+                0.5 * (la.toDouble / nl) *
+                  math.log((BigInt(2) * la * s.ne).toDouble / mix)
+              else 0.0
+            jsd += tp + tq
           }
-      }
+          val r4 = BigDecimal(jsd).setScale(4,
+            BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
+          emit(JsDrift(t, s.ne, nl, r4))
+          st
+        }) { (_, prev, r, _) =>
+      val st = prev.getOrElse(JsState(Map.empty, 0L))
+      JsState(st.late.updated(r._2, st.late.getOrElse(r._2, 0L) + 1L), st.nLate + 1L)
+    }
   }
 }

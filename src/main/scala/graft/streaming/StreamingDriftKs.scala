@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 
 /** Live Kolmogorov–Smirnov shape drift — the 27th streaming twin,
   * incremental over x_drift_ks:
@@ -96,34 +95,36 @@ object StreamingDriftKs {
   private[streaming] def scaleBp(mx: BigInt, ne: Long, nl: Long): Long =
     (mx * 10000 / (BigInt(ne) * nl)).toLong
 
+  /** The late-histogram fold the KS/AD/CvM/EMD twins share: events are
+    * (event_type, cents) late-half arrivals; a type with no early mass
+    * is dropped (the batch empty-half rule), and every batch that
+    * touches a type emits `row` from its updated state. */
+  private[streaming] def lateFold[O: Encoder](events: DataFrame,
+      early: Map[String, Seq[(Long, Long)]])(
+      row: (String, EarlySide, KsState) => O): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val sides = build(early)
+    require(sides.nonEmpty, "early reference must be non-empty")
+    val rows = events.select($"event_type", $"cents".cast("long"))
+      .as[(String, Long)]
+      .filter(r => sides.contains(r._1))
+    KeyedFold(rows)(_._1).fold[KsState, O](
+        summary = { (t, _, st, emit) => emit(row(t, sides(t), st)); st }) {
+      (_, prev, r, _) =>
+        val st = prev.getOrElse(KsState(Map.empty, 0L))
+        KsState(st.late.updated(r._2, st.late.getOrElse(r._2, 0L) + 1L),
+          st.nLate + 1L)
+    }
+  }
+
   /** events: (event_type, cents) — the late-half arrivals; early: the
     * frozen early-half histogram, event_type → (cents level, count). */
   def drift(events: DataFrame, early: Map[String, Seq[(Long, Long)]])
       : Dataset[KsDrift] = {
     import events.sparkSession.implicits._
-    val sides = build(early)
-    require(sides.nonEmpty, "early reference must be non-empty")
-    events.select($"event_type", $"cents".cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KsState, KsDrift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (t: String, rows: Iterator[(String, Long)],
-         state: GroupState[KsState]) =>
-          sides.get(t) match {
-            case None => Iterator.empty // no early mass: the batch drop rule
-            case Some(s) =>
-              var st = state.getOption.getOrElse(KsState(Map.empty, 0L))
-              rows.foreach { case (_, v) =>
-                st = KsState(
-                  st.late.updated(v, st.late.getOrElse(v, 0L) + 1L),
-                  st.nLate + 1L)
-              }
-              state.update(st)
-              val (mx, at) = sup(s, st.late, st.nLate)
-              Iterator.single(KsDrift(t, s.ne, st.nLate, at,
-                scaleBp(mx, s.ne, st.nLate)))
-          }
-      }
+    lateFold(events, early) { (t, s, st) =>
+      val (mx, at) = sup(s, st.late, st.nLate)
+      KsDrift(t, s.ne, st.nLate, at, scaleBp(mx, s.ne, st.nLate))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live Mann–Whitney location drift — the 26th streaming twin,
   * incremental over x_drift_mw: the frozen EARLY-half value
@@ -57,43 +56,36 @@ object StreamingDriftMw {
     import events.sparkSession.implicits._
     val sides = build(early)
     require(sides.nonEmpty, "early reference must be non-empty")
-    events.select($"event_type", $"cents".cast("long"))
+    val rows = events.select($"event_type", $"cents".cast("long"))
       .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MwState, MwDrift](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (t: String, rows: Iterator[(String, Long)],
-         state: GroupState[MwState]) =>
-          sides.get(t) match {
-            case None => Iterator.empty // no early mass: the batch drop rule
-            case Some(s) =>
-              var st = state.getOption.getOrElse(MwState(0L, 0L))
-              rows.foreach { case (_, v) =>
-                // first level strictly above v → cntLE via the level
-                // below it; eq only when v is exactly a stored level
-                val i = {
-                  val p = java.util.Arrays.binarySearch(s.cents, v)
-                  if (p >= 0) p else -(p + 1) - 1 // index of level ≤ v, or -1
-                }
-                val isLevel = i >= 0 && s.cents(i) == v
-                val cumLe = if (i < 0) 0L else s.cumLe(i)
-                val eq = if (isLevel) s.eq(i) else 0L
-                val greater = s.ne - cumLe
-                // addExact: u2 ≤ 2·ne·nl is the state's Long-width
-                // envelope (mixed per-type rows ≳ 3·10⁹) — raise
-                // loudly there instead of wrapping (the DriftArith
-                // loud-or-exact rule; the state schema stays a Long,
-                // checkpoint-compatible)
-                st = MwState(st.nLate + 1L,
-                  math.addExact(st.u2, 2L * greater + eq))
-              }
-              state.update(st)
-              // BigInt scaling (r18 wide spelling): Long wrapped
-              // silently past u2 ≈ 9.2·10¹⁴; quotient ≤ 10⁴
-              Iterator.single(MwDrift(t, s.ne, st.nLate, st.u2,
-                (BigInt(st.u2) * 10000 /
-                  (BigInt(2) * s.ne * st.nLate)).toLong))
-          }
+      .filter(r => sides.contains(r._1)) // no early mass: the batch drop rule
+    KeyedFold(rows)(_._1).fold[MwState, MwDrift](
+        summary = { (t, _, st, emit) =>
+          val s = sides(t)
+          // BigInt scaling (r18 wide spelling): Long wrapped
+          // silently past u2 ≈ 9.2·10¹⁴; quotient ≤ 10⁴
+          emit(MwDrift(t, s.ne, st.nLate, st.u2,
+            (BigInt(st.u2) * 10000 / (BigInt(2) * s.ne * st.nLate)).toLong))
+          st
+        }) { (t, prev, r, _) =>
+      val s = sides(t)
+      val v = r._2
+      val st = prev.getOrElse(MwState(0L, 0L))
+      // first level strictly above v → cntLE via the level below it; eq
+      // only when v is exactly a stored level
+      val i = {
+        val p = java.util.Arrays.binarySearch(s.cents, v)
+        if (p >= 0) p else -(p + 1) - 1 // index of level ≤ v, or -1
       }
+      val isLevel = i >= 0 && s.cents(i) == v
+      val cumLe = if (i < 0) 0L else s.cumLe(i)
+      val eq = if (isLevel) s.eq(i) else 0L
+      val greater = s.ne - cumLe
+      // addExact: u2 ≤ 2·ne·nl is the state's Long-width envelope (mixed
+      // per-type rows ≳ 3·10⁹) — raise loudly there instead of wrapping
+      // (the DriftArith loud-or-exact rule; the state schema stays a
+      // Long, checkpoint-compatible)
+      MwState(st.nLate + 1L, math.addExact(st.u2, 2L * greater + eq))
+    }
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Ingest-time EXACT dedup — the streaming twin of
   * [[graft.operators.ExactDedup]]: documents arriving on a stream are
@@ -39,45 +36,30 @@ object StreamingExactDedup {
       bootstrapIndex: Option[String] = None): Dataset[Dup] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val fold = {
-      (_: String, rows: Iterator[(String, Long)], state: GroupState[Long]) =>
-        val out = ArrayBuffer.empty[Dup]
-        val ids = rows.map(_._2).toArray.sorted
-        // Option state — no in-band sentinel, so every Long is a legal
-        // doc_id. The `id != keeper` guard keeps at-least-once redelivery
-        // of the keeper itself (or a stream replaying the bootstrapped
-        // corpus) from emitting a self-pair Dup(id, id) — the same guard
-        // StreamingNearDup carries.
-        var keeper: Option[Long] = state.getOption
-        ids.foreach { id =>
-          keeper match {
-            case None            => keeper = Some(id)
-            case Some(k) if id != k => out += Dup(id, k)
-            case _               => ()
-          }
-        }
-        keeper.foreach(state.update)
-        out.iterator
-    }: (String, Iterator[(String, Long)], GroupState[Long]) => Iterator[Dup]
-    val grouped = docs
+    val rows = docs
       .where($"text".isNotNull)
       .select(sha2($"text", 256).as("digest"), $"doc_id")
       .as[(String, Long)]
-      .groupByKey(_._1)
-    bootstrapIndex match {
-      case None =>
-        grouped.flatMapGroupsWithState[Long, Dup](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-      case Some(path) =>
-        // one state row per digest; min across appends, as in the batch
-        // probe
-        val initial = spark.read.parquet(path)
-          .groupBy($"digest").agg(min($"keeper_id").as("keeper_id"))
-          .as[(String, Long)]
-          .groupByKey(_._1)
-          .mapValues(_._2)
-        grouped.flatMapGroupsWithState[Long, Dup](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial)(fold)
+    // one state row per digest; min across appends, as in the batch probe
+    val initial = bootstrapIndex.map { path =>
+      spark.read.parquet(path)
+        .groupBy($"digest").agg(min($"keeper_id").as("keeper_id"))
+        .as[(String, Long)]
+        .groupByKey(_._1)
+        .mapValues(_._2)
+    }
+    // Option state — no in-band sentinel, so every Long is a legal
+    // doc_id. The `id != keeper` guard keeps at-least-once redelivery of
+    // the keeper itself (or a stream replaying the bootstrapped corpus)
+    // from emitting a self-pair Dup(id, id) — the same guard
+    // StreamingNearDup carries.
+    KeyedFold(rows)(_._1).fold[Long, Dup](
+        order = Some(Ordering.by(_._2)), initial = initial) { (_, keeper, r, emit) =>
+      val id = r._2
+      keeper match {
+        case None => id
+        case Some(k) => if (id != k) emit(Dup(id, k)); k
+      }
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live conversion funnel — the incremental twin of x_funnel: events
   * arrive as a stream and every user carries three numbers of state
@@ -11,11 +10,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Contract matches the batch query exactly — stage 2 is the first
   * `click` in (t1, t1+24 h], stage 3 the first `purchase` in
-  * (t2, t2+72 h] — under the same in-order delivery assumption the
-  * other live folds document (a user's later events arrive in later
-  * batches; within a batch the group is sorted by timestamp before
-  * folding). Greedy first-match on an ordered stream IS the min, so
-  * the streaming state equals the batch min-chaining.
+  * (t2, t2+72 h] — under the [[KeyedFold]] in-order contract (sorted
+  * by timestamp within a batch). Greedy first-match on an ordered
+  * stream IS the min, so the streaming state equals the batch
+  * min-chaining.
   *
   * State is 3 longs per user — bounded by the user population, not the
   * event volume; at cluster scale it routes to RocksDB like every
@@ -37,31 +35,24 @@ object StreamingFunnel {
     * stage transition. */
   def advances(events: DataFrame): Dataset[StageAdvance] = {
     import events.sparkSession.implicits._
-    events.select($"user_id".cast("long"), $"event_type", $"ms".cast("long"))
+    val rows = events.select($"user_id".cast("long"), $"event_type", $"ms".cast("long"))
       .as[(Long, String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[FunnelState, StageAdvance](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, String, Long)],
-         state: GroupState[FunnelState]) =>
-          var s = state.getOption.getOrElse(FunnelState(0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[StageAdvance]
-          rows.toSeq.sortBy(_._3).foreach { case (_, typ, ms) =>
-            if (typ == "view" && s.t1 == 0L) {
-              s = s.copy(t1 = ms)
-              out += StageAdvance(user, 1, ms)
-            } else if (typ == "click" && s.t1 != 0L && s.t2 == 0L &&
-                ms > s.t1 && ms <= s.t1 + ClickWindowMs) {
-              s = s.copy(t2 = ms)
-              out += StageAdvance(user, 2, ms)
-            } else if (typ == "purchase" && s.t2 != 0L && s.t3 == 0L &&
-                ms > s.t2 && ms <= s.t2 + PurchaseWindowMs) {
-              s = s.copy(t3 = ms)
-              out += StageAdvance(user, 3, ms)
-            }
-          }
-          state.update(s)
-          out.iterator
-      }
+    KeyedFold(rows)(_._1).fold[FunnelState, StageAdvance](
+        order = Some(Ordering.by(_._3))) { (user, prev, r, emit) =>
+      val s = prev.getOrElse(FunnelState(0L, 0L, 0L))
+      val (_, typ, ms) = r
+      if (typ == "view" && s.t1 == 0L) {
+        emit(StageAdvance(user, 1, ms))
+        s.copy(t1 = ms)
+      } else if (typ == "click" && s.t1 != 0L && s.t2 == 0L &&
+          ms > s.t1 && ms <= s.t1 + ClickWindowMs) {
+        emit(StageAdvance(user, 2, ms))
+        s.copy(t2 = ms)
+      } else if (typ == "purchase" && s.t2 != 0L && s.t3 == 0L &&
+          ms > s.t2 && ms <= s.t2 + PurchaseWindowMs) {
+        emit(StageAdvance(user, 3, ms))
+        s.copy(t3 = ms)
+      } else s
+    }
   }
 }

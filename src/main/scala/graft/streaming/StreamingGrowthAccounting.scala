@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live growth accounting — the 25th streaming twin, incremental over
   * x_growth_accounting: as events arrive, each user's FIRST event in a
@@ -24,32 +23,26 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * [[StreamingAbsorbMass]]'s n_end ≡ arrivals − n_out.
   *
   * State per user is TWO week numbers ([[StreamingPaths]]'s
-  * constant-bytes discipline); in-order delivery per user is the same
-  * contract as the other live folds, with each micro-batch's group
-  * sorted by (ts_ms, event_id) before folding. Week = ms DIV
+  * constant-bytes discipline), folded under the [[KeyedFold]] in-order
+  * contract with each micro-batch's group sorted by (ts_ms, event_id). Week = ms DIV
   * 604800000 with the batch query's own trunc division (corpus
   * timestamps are post-epoch; a pre-1970 stream would need floorDiv in
   * BOTH engines — the SCALING trunc rule).
   *
-  * CONTRACT ENFORCEMENT (ADVICE r15): under in-order delivery a
-  * user's week sequence is non-decreasing, so ANY arrival with
-  * w < lastW is a cross-micro-batch reorder — and if it carries the
-  * user's only activity for an uncounted mid-span week, the stream
-  * silently undercounts that (user, week) relative to batch. The
-  * two-long state cannot distinguish that case from a benign repeat
-  * of an already-counted week, so the fold counts EVERY w < lastW
-  * arrival in the accumulator [[emissions]] returns — a loud upper
-  * bound: zero means the parity guarantee held exactly; nonzero
-  * means the in-order contract was violated and parity is void until
-  * re-fed in order. (Task retries can inflate the count — it is a
-  * violation DETECTOR, not a metric; the parity claim needs only
-  * zero/nonzero.)
+  * REORDERS (ADVICE r15): in order, a user's week sequence is
+  * non-decreasing, so ANY arrival with w < lastW is a reorder — and if
+  * it carries the user's only activity for an uncounted mid-span week,
+  * the stream would silently undercount that (user, week). The
+  * two-long state cannot tell that case from a benign repeat of a
+  * counted week, so EVERY w < lastW arrival is counted as a reorder —
+  * a loud upper bound. (Task retries can inflate the count — it is a
+  * violation DETECTOR, not a metric.)
   *
   * Trust chain: the batch x_growth_accounting is oracle-hash-matched,
   * so the parity spec's equality pins stream ≡ batch ≡ DuckDB for the
   * full weekly decomposition across micro-batch splits and a
   * checkpoint restart. At 100 TB: state is |users| × two longs
-  * (flatMapGroupsWithState shards it across executors); emissions are
+  * (sharded by user across executors); emissions are
   * ≤ one tiny row per (user, week) into whatever counting sink the
   * deployment already runs. */
 object StreamingGrowthAccounting {
@@ -60,47 +53,24 @@ object StreamingGrowthAccounting {
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis.
     *
-    * Returns the hit stream PAIRED with its freshly-created
-    * in-order-contract accumulator (the detector the fold increments
-    * on every w < lastW arrival — the class doc's CONTRACT
-    * ENFORCEMENT paragraph). Paired-per-call, not a shared handle
-    * (ADVICE r16): a last-writer-wins global Option meant two
-    * concurrent streams in one JVM could read the OTHER query's
-    * zero/nonzero parity signal; here each caller owns exactly the
-    * accumulator its own fold writes. */
+    * Returns the hit stream paired with its own reorder accumulator
+    * ([[KeyedFold.Keyed.foldInOrder]]). */
   def emissions(events: DataFrame)
       : (Dataset[GrowthHit], org.apache.spark.util.LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.growth.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[WeekSpan, GrowthHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[WeekSpan]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[GrowthHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            val w = ms / 604800000L
-            if (st == null) {
-              out += GrowthHit("new", w); st = WeekSpan(w, w)
-            } else if (w > st.lastW) {
-              out += GrowthHit(
-                if (st.lastW == w - 1) "retained" else "resurrected", w)
-              st = st.copy(lastW = w)
-            } else if (w < st.lastW) {
-              // in-order weeks are non-decreasing: this is a reorder
-              // across micro-batches — surfaced, never silent (ADVICE
-              // r15). w == lastW stays the benign same-week repeat.
-              oooAcc.add(1L)
-            }
-          }
-          state.update(st)
-          out.iterator
+    val rows = events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)]
+    KeyedFold(rows)(_._1).foldInOrder[WeekSpan, GrowthHit](
+        "graft.growth.outOfOrderArrivals", Ordering.by(r => (r._2, r._3)))(
+        (st, r) => r._2 / 604800000L < st.lastW) { (_, prev, r, emit) =>
+      val w = r._2 / 604800000L
+      prev match {
+        case None => emit(GrowthHit("new", w)); WeekSpan(w, w)
+        case Some(st) if w > st.lastW =>
+          emit(GrowthHit(if (st.lastW == w - 1) "retained" else "resurrected", w))
+          st.copy(lastW = w)
+        case Some(st) => st // w == lastW: the benign same-week repeat
       }
-    (hits, oooAcc)
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

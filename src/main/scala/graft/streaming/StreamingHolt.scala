@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live twin of x_forecast_holt — the 38th, completing the forecast
   * family's live side alongside [[StreamingSes]] and
@@ -17,9 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * row at any batch split (stream ≡ batch ≡ DuckDB). The seed emission
   * reproduces the batch n_days = 1 branch (b = 0 makes l + b = l).
   *
-  * CONTRACT ENFORCEMENT (the [[StreamingHoltWinters]] rule): day ≤
-  * lastDay arrivals increment the accumulator [[levels]] returns and
-  * fold/emit NOTHING. */
+  * REORDERS (the [[StreamingHoltWinters]] rule): a day ≤ lastDay
+  * arrival is a reorder under the [[KeyedFold]] in-order contract. */
 object StreamingHolt {
 
   final case class HoltState(l: Long, b: Long, e: Long, nDays: Long,
@@ -31,44 +29,27 @@ object StreamingHolt {
       level_bp: Long, trend_bp: Long, forecast_next_bp: Long, mae_bp: Long)
 
   /** rollup: (event_type, day, n) with `day` = epoch-ms DIV 86400000.
-    * Returns the emission stream paired with its in-order-contract
-    * accumulator. */
+    * Returns the emission stream paired with its reorder accumulator. */
   def levels(rollup: DataFrame)
       : (Dataset[HoltPoint], org.apache.spark.util.LongAccumulator) = {
     import rollup.sparkSession.implicits._
-    val oooAcc = rollup.sparkSession.sparkContext
-      .longAccumulator("graft.holt.outOfOrderArrivals")
-    val points = rollup
-      .select($"event_type", $"day".cast("long"), $"n".cast("long"))
+    val rows = rollup.select($"event_type", $"day".cast("long"), $"n".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HoltState, HoltPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[HoltState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[HoltPoint]
-          def emit(day: Long): Unit =
-            out += HoltPoint(typ, day, st.nDays, st.l, st.b, st.l + st.b,
-              if (st.nDays >= 2L) st.e / (st.nDays - 1L) else 0L)
-          rows.toSeq.sortBy(_._2).foreach { case (_, day, n) =>
-            val xv = n * 10000L
-            if (st == null) {
-              st = HoltState(xv, 0L, 0L, 1L, day)
-              emit(day)
-            } else if (day > st.lastDay) {
-              val l2 = (xv + st.l + st.b) / 2L
-              val b2 = (l2 - st.l + st.b) / 2L
-              st = HoltState(l2, b2,
-                st.e + math.abs(xv - st.l - st.b), st.nDays + 1L, day)
-              emit(day)
-            } else {
-              oooAcc.add(1L) // reorder/duplicate: surfaced, never silent
-            }
-          }
-          state.update(st)
-          out.iterator
+    KeyedFold(rows)(_._1).foldInOrder[HoltState, HoltPoint](
+        "graft.holt.outOfOrderArrivals", Ordering.by(_._2))(
+        (st, r) => r._2 <= st.lastDay) { (typ, prev, r, emit) =>
+      val (_, day, n) = r
+      val xv = n * 10000L
+      val st = prev match {
+        case None => HoltState(xv, 0L, 0L, 1L, day)
+        case Some(p) =>
+          val l2 = (xv + p.l + p.b) / 2L
+          val b2 = (l2 - p.l + p.b) / 2L
+          HoltState(l2, b2, p.e + math.abs(xv - p.l - p.b), p.nDays + 1L, day)
       }
-    (points, oooAcc)
+      emit(HoltPoint(typ, day, st.nDays, st.l, st.b, st.l + st.b,
+        if (st.nDays >= 2L) st.e / (st.nDays - 1L) else 0L))
+      st
+    }
   }
 }

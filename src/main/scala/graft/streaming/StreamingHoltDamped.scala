@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live twin of x_forecast_holt_damped — the 39th: [[StreamingHolt]]
   * with every read of the trend damped first (φ = 3/4 = (b·3) DIV 4,
@@ -9,8 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * live row carries the next-day, 7-day and asymptotic forecasts the
   * damped model exists to provide. Same five-long state, same exact
   * integers, same bit-identity of the last emission per type to the
-  * oracle-hash-matched batch row; same day ≤ lastDay contract
-  * detector (the [[StreamingHoltWinters]] rule). */
+  * oracle-hash-matched batch row; same day ≤ lastDay reorder
+  * predicate (the [[StreamingHoltWinters]] rule). */
 object StreamingHoltDamped {
 
   final case class DampedPoint(event_type: String, day: Long, n_days: Long,
@@ -18,48 +17,32 @@ object StreamingHoltDamped {
       forecast_week_bp: Long, forecast_inf_bp: Long, mae_bp: Long)
 
   /** rollup: (event_type, day, n) with `day` = epoch-ms DIV 86400000.
-    * Returns the emission stream paired with its in-order-contract
-    * accumulator. */
+    * Returns the emission stream paired with its reorder accumulator. */
   def levels(rollup: DataFrame)
       : (Dataset[DampedPoint], org.apache.spark.util.LongAccumulator) = {
     import rollup.sparkSession.implicits._
-    val oooAcc = rollup.sparkSession.sparkContext
-      .longAccumulator("graft.holtdamped.outOfOrderArrivals")
-    val points = rollup
-      .select($"event_type", $"day".cast("long"), $"n".cast("long"))
+    val rows = rollup.select($"event_type", $"day".cast("long"), $"n".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamingHolt.HoltState, DampedPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[StreamingHolt.HoltState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[DampedPoint]
-          def emit(day: Long): Unit =
-            out += DampedPoint(typ, day, st.nDays, st.l, st.b,
-              st.l + (st.b * 3L) / 4L,
-              st.l + (st.b * 42591L) / 16384L,
-              st.l + 3L * st.b,
-              if (st.nDays >= 2L) st.e / (st.nDays - 1L) else 0L)
-          rows.toSeq.sortBy(_._2).foreach { case (_, day, n) =>
-            val xv = n * 10000L
-            if (st == null) {
-              st = StreamingHolt.HoltState(xv, 0L, 0L, 1L, day)
-              emit(day)
-            } else if (day > st.lastDay) {
-              val db = (st.b * 3L) / 4L
-              val l2 = (xv + st.l + db) / 2L
-              val b2 = (l2 - st.l + db) / 2L
-              st = StreamingHolt.HoltState(l2, b2,
-                st.e + math.abs(xv - st.l - db), st.nDays + 1L, day)
-              emit(day)
-            } else {
-              oooAcc.add(1L) // reorder/duplicate: surfaced, never silent
-            }
-          }
-          state.update(st)
-          out.iterator
+    KeyedFold(rows)(_._1).foldInOrder[StreamingHolt.HoltState, DampedPoint](
+        "graft.holtdamped.outOfOrderArrivals", Ordering.by(_._2))(
+        (st, r) => r._2 <= st.lastDay) { (typ, prev, r, emit) =>
+      val (_, day, n) = r
+      val xv = n * 10000L
+      val st = prev match {
+        case None => StreamingHolt.HoltState(xv, 0L, 0L, 1L, day)
+        case Some(p) =>
+          val db = (p.b * 3L) / 4L
+          val l2 = (xv + p.l + db) / 2L
+          val b2 = (l2 - p.l + db) / 2L
+          StreamingHolt.HoltState(l2, b2, p.e + math.abs(xv - p.l - db),
+            p.nDays + 1L, day)
       }
-    (points, oooAcc)
+      emit(DampedPoint(typ, day, st.nDays, st.l, st.b,
+        st.l + (st.b * 3L) / 4L,
+        st.l + (st.b * 42591L) / 16384L,
+        st.l + 3L * st.b,
+        if (st.nDays >= 2L) st.e / (st.nDays - 1L) else 0L))
+      st
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live twin of x_forecast_holt_winters — the 31st: the integer-bp
   * seasonal forecast state folded over the daily count stream as each
@@ -18,19 +17,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * oracle-hash-matched, chaining stream ≡ batch ≡ DuckDB); the
   * seed emission reproduces the batch n_days = 1 branch with no
   * special casing (b = 0 and s ≡ 0 make l + b + s_next = l).
-  * Same per-type in-order delivery contract as [[StreamingSes]];
-  * within a micro-batch the group is sorted by day.
+  * Folded under the [[KeyedFold]] in-order contract, sorted by day
+  * within a micro-batch.
   *
-  * CONTRACT ENFORCEMENT (ADVICE r16 — the
-  * [[StreamingGrowthAccounting]] rule, applied here because this fold
-  * is NOT append-only-safe the way the existence twins are): the
-  * rollup contract is one CLOSED (type, day) row, non-decreasing in
-  * day per type. A cross-micro-batch day reorder OR a re-delivered
-  * (type, day) row would silently and permanently corrupt the
-  * sequential seasonal state, so the state carries lastDay and every
-  * arrival with day <= lastDay increments the accumulator
-  * [[levels]] returns and folds/emits NOTHING — parity is void under
-  * violation, loudly, never silently skewed. */
+  * REORDERS (ADVICE r16 — enforced here because this fold is NOT
+  * append-only-safe the way the existence twins are): the rollup
+  * contract is one CLOSED (type, day) row, non-decreasing in day per
+  * type. A cross-micro-batch day reorder OR a re-delivered (type, day)
+  * row would silently and permanently corrupt the sequential seasonal
+  * state, so the state carries lastDay and every arrival with
+  * day <= lastDay is a reorder: counted, not folded. */
 object StreamingHoltWinters {
 
   // CHECKPOINT BOUNDARY (r17 ADVICE): lastDay was ADDED to this state
@@ -51,55 +47,35 @@ object StreamingHoltWinters {
       forecast_next_bp: Long, season_amp_bp: Long, mae_bp: Long)
 
   /** rollup: (event_type, day, n) with `day` = epoch-ms DIV 86400000.
-    * Returns the emission stream paired with its own
-    * in-order-contract accumulator (the class doc's CONTRACT
-    * ENFORCEMENT paragraph; the pairing rule of
-    * [[StreamingGrowthAccounting.emissions]]). */
+    * Returns the emission stream paired with its reorder accumulator. */
   def levels(rollup: DataFrame)
       : (Dataset[HwPoint], org.apache.spark.util.LongAccumulator) = {
     import rollup.sparkSession.implicits._
-    val oooAcc = rollup.sparkSession.sparkContext
-      .longAccumulator("graft.holtwinters.outOfOrderArrivals")
-    val points = rollup
-      .select($"event_type", $"day".cast("long"), $"n".cast("long"))
+    val rows = rollup.select($"event_type", $"day".cast("long"), $"n".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HwState, HwPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[HwState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[HwPoint]
-          def emit(day: Long): Unit = {
-            val sn = st.s(((day + 1L) % 7L).toInt)
-            out += HwPoint(typ, day, st.nDays, st.l, st.b, sn,
-              st.l + st.b + sn, st.s.max - st.s.min,
-              if (st.nDays >= 2L) st.e / (st.nDays - 1L) else 0L)
-          }
-          rows.toSeq.sortBy(_._2).foreach { case (_, day, n) =>
-            val xv = n * 10000L
-            if (st == null) {
-              st = HwState(xv, 0L, Array.fill(7)(0L), 0L, 1L, day)
-              emit(day)
-            } else if (day > st.lastDay) {
-              val i = (day % 7L).toInt
-              val l2 = (xv - st.s(i) + st.l + st.b) / 2L
-              val b2 = (l2 - st.l + st.b) / 2L
-              val e2 = st.e + math.abs(xv - st.l - st.b - st.s(i))
-              val s2 = st.s.clone()
-              s2(i) = (xv - l2 + st.s(i)) / 2L
-              st = HwState(l2, b2, s2, e2, st.nDays + 1L, day)
-              emit(day)
-            } else {
-              // day <= lastDay: a reorder or a re-delivered closed
-              // (type, day) row — folding it would corrupt the
-              // seasonal state permanently. Surfaced, never silent.
-              oooAcc.add(1L)
-            }
-          }
-          state.update(st)
-          out.iterator
+    KeyedFold(rows)(_._1).foldInOrder[HwState, HwPoint](
+        "graft.holtwinters.outOfOrderArrivals", Ordering.by(_._2))(
+        // day <= lastDay: a reorder or a re-delivered closed (type, day)
+        // row — folding it would corrupt the seasonal state permanently
+        (st, r) => r._2 <= st.lastDay) { (typ, prev, r, emit) =>
+      val (_, day, n) = r
+      val xv = n * 10000L
+      val st = prev match {
+        case None => HwState(xv, 0L, Array.fill(7)(0L), 0L, 1L, day)
+        case Some(p) =>
+          val i = (day % 7L).toInt
+          val l2 = (xv - p.s(i) + p.l + p.b) / 2L
+          val b2 = (l2 - p.l + p.b) / 2L
+          val e2 = p.e + math.abs(xv - p.l - p.b - p.s(i))
+          val s2 = p.s.clone()
+          s2(i) = (xv - l2 + p.s(i)) / 2L
+          HwState(l2, b2, s2, e2, p.nDays + 1L, day)
       }
-    (points, oooAcc)
+      val sn = st.s(((day + 1L) % 7L).toInt)
+      emit(HwPoint(typ, day, st.nDays, st.l, st.b, sn,
+        st.l + st.b + sn, st.s.max - st.s.min,
+        if (st.nDays >= 2L) st.e / (st.nDays - 1L) else 0L))
+      st
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live twin of x_forecast_hw_log — the 40th, closing the forecast
   * family's live side completely (SES / Holt / damped / HW / HW-log
@@ -21,10 +20,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * as literal 0.0, level = forecast = ln x₁ — the batch's own
   * branch values).
   *
-  * CONTRACT ENFORCEMENT (the [[StreamingHoltWinters]] rule): day ≤
-  * lastDay arrivals increment the accumulator [[levels]] returns and
-  * fold/emit NOTHING — a silent fold would corrupt the seasonal
-  * profile permanently. */
+  * REORDERS (the [[StreamingHoltWinters]] rule): a day ≤ lastDay
+  * arrival is a reorder under the [[KeyedFold]] in-order contract — a
+  * silent fold would corrupt the seasonal profile permanently. */
 object StreamingHwLog {
 
   final case class HwLogState(l: Double, b: Double, s: Array[Double],
@@ -38,55 +36,37 @@ object StreamingHwLog {
     BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** rollup: (event_type, day, n) with `day` = epoch-ms DIV 86400000.
-    * Returns the emission stream paired with its in-order-contract
-    * accumulator. */
+    * Returns the emission stream paired with its reorder accumulator. */
   def levels(rollup: DataFrame)
       : (Dataset[HwLogPoint], org.apache.spark.util.LongAccumulator) = {
     import rollup.sparkSession.implicits._
-    val oooAcc = rollup.sparkSession.sparkContext
-      .longAccumulator("graft.hwlog.outOfOrderArrivals")
-    val points = rollup
-      .select($"event_type", $"day".cast("long"), $"n".cast("long"))
+    val rows = rollup.select($"event_type", $"day".cast("long"), $"n".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[HwLogState, HwLogPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[HwLogState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[HwLogPoint]
-          def emit(day: Long): Unit = {
-            if (st.nDays == 1L)
-              out += HwLogPoint(typ, day, 1L, r4(st.l), 0.0, 0.0,
-                r4(st.l), 0.0, 0.0)
-            else {
-              val sn = st.s(((day + 1L) % 7L).toInt)
-              out += HwLogPoint(typ, day, st.nDays, r4(st.l), r4(st.b),
-                r4(sn), r4(st.l + st.b + sn), r4(st.s.max - st.s.min),
-                r4(st.e / (st.nDays - 1L)))
-            }
-          }
-          rows.toSeq.sortBy(_._2).foreach { case (_, day, n) =>
-            val x = math.log(n.toDouble)
-            if (st == null) {
-              st = HwLogState(x, 0.0, Array.fill(7)(0.0), 0.0, 1L, day)
-              emit(day)
-            } else if (day > st.lastDay) {
-              val i = (day % 7L).toInt
-              val l2 = (x - st.s(i) + st.l + st.b) / 2.0
-              val b2 = (l2 - st.l + st.b) / 2.0
-              val e2 = st.e + math.abs(x - st.l - st.b - st.s(i))
-              val s2 = st.s.clone()
-              s2(i) = (x - l2 + st.s(i)) / 2.0
-              st = HwLogState(l2, b2, s2, e2, st.nDays + 1L, day)
-              emit(day)
-            } else {
-              oooAcc.add(1L) // reorder/duplicate: surfaced, never silent
-            }
-          }
-          state.update(st)
-          out.iterator
+    KeyedFold(rows)(_._1).foldInOrder[HwLogState, HwLogPoint](
+        "graft.hwlog.outOfOrderArrivals", Ordering.by(_._2))(
+        (st, r) => r._2 <= st.lastDay) { (typ, prev, r, emit) =>
+      val (_, day, n) = r
+      val x = math.log(n.toDouble)
+      val st = prev match {
+        case None => HwLogState(x, 0.0, Array.fill(7)(0.0), 0.0, 1L, day)
+        case Some(p) =>
+          val i = (day % 7L).toInt
+          val l2 = (x - p.s(i) + p.l + p.b) / 2.0
+          val b2 = (l2 - p.l + p.b) / 2.0
+          val e2 = p.e + math.abs(x - p.l - p.b - p.s(i))
+          val s2 = p.s.clone()
+          s2(i) = (x - l2 + p.s(i)) / 2.0
+          HwLogState(l2, b2, s2, e2, p.nDays + 1L, day)
       }
-    (points, oooAcc)
+      if (st.nDays == 1L)
+        emit(HwLogPoint(typ, day, 1L, r4(st.l), 0.0, 0.0, r4(st.l), 0.0, 0.0))
+      else {
+        val sn = st.s(((day + 1L) % 7L).toInt)
+        emit(HwLogPoint(typ, day, st.nDays, r4(st.l), r4(st.b),
+          r4(sn), r4(st.l + st.b + sn), r4(st.s.max - st.s.min),
+          r4(st.e / (st.nDays - 1L))))
+      }
+      st
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live Kemeny–Snell lumpability — the 43rd streaming twin,
   * incremental over x_markov_lumpable: each user's arrivals extend
@@ -14,16 +13,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * shared fold (graft.queries.EventAnalytics.lumpableFold) over the
   * counted hits.
   *
-  * Append-only by the [[StreamingPaths]] argument verbatim: under
-  * per-user in-order delivery the consecutive-pair relation is
+  * Append-only by the [[StreamingPaths]] argument verbatim: under the
+  * [[KeyedFold]] in-order contract the consecutive-pair relation is
   * decided at arrival time and never revised — state per user is the
   * LAST event type plus the (ts_us, event_id) order cursor, constant
   * bytes. The batch chain orders by (ts_us, event_id); an arrival
   * whose (us, id) sorts LEXICOGRAPHICALLY below the cursor would
-  * splice a pair the batch never forms, so the detector counts
-  * exactly that condition into the per-call accumulator (the
-  * [[StreamingConversionLag]] pairing rule — surfaced, never silent,
-  * equal-µs ties covered by the id tiebreak).
+  * splice a pair the batch never forms, so exactly that condition is
+  * the reorder predicate (equal-µs ties covered by the id tiebreak).
   *
   * At 100 TB: |users| × three-longs-and-a-string of sharded state,
   * one O(1) emission per arrival, and a K²-bounded read-side fold
@@ -36,35 +33,20 @@ object StreamingMarkovLumpable {
 
   /** events: (user_id, ts_us, event_id, event_type) — the batch
     * chain's own (µs, id) order key. Returns the
-    * transition-hit stream paired with its in-order-contract
-    * accumulator. */
+    * transition-hit stream paired with its reorder accumulator. */
   def emissions(events: DataFrame)
       : (Dataset[TransHit], org.apache.spark.util.LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.markovlumpable.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_us", "event_id", "event_type")
+    val rows = events.select("user_id", "ts_us", "event_id", "event_type")
       .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LumpState, TransHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[LumpState]) =>
-          var st = state.getOption.getOrElse(LumpState(null, -1L, -1L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[TransHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach {
-            case (_, us, id, t) =>
-              if (us < st.lastUs || (us == st.lastUs && id < st.lastId)) {
-                oooAcc.add(1L) // reorder: surfaced, never silent
-              } else {
-                if (st.lastType != null) out += TransHit(st.lastType, t)
-                st = LumpState(t, us, id)
-              }
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    KeyedFold(rows)(_._1).foldInOrder[LumpState, TransHit](
+        "graft.markovlumpable.outOfOrderArrivals", Ordering.by(r => (r._2, r._3)))(
+        (st, r) => r._2 < st.lastUs || (r._2 == st.lastUs && r._3 < st.lastId)) {
+      (_, prev, r, emit) =>
+        val (_, us, id, t) = r
+        prev.map(_.lastType).filter(_ != null).foreach(p => emit(TransHit(p, t)))
+        LumpState(t, us, id)
+    }
   }
 
   /** Fold a table of emitted transition hits into the batch

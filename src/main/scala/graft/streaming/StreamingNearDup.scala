@@ -1,10 +1,7 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.MinHashDedup
 
@@ -27,8 +24,8 @@ import graft.operators.MinHashDedup
   * than `retention` (wall clock at insertion) are pruned whenever
   * their bucket is next touched — a near-dup of a doc older than the
   * window is deliberately not reported, exactly how the reference
-  * bounds hot-topic history. Lazy pruning deliberately avoids
-  * `GroupStateTimeout.ProcessingTimeTimeout`: that makes
+  * bounds hot-topic history. Lazy pruning deliberately avoids a
+  * processing-time state timeout: that makes
   * `shouldRunAnotherBatch` true unconditionally, so an idle stream
   * busy-spins empty micro-batches just to fire timers (measured: a
   * tight checkpoint-write loop). The cost is that a bucket never
@@ -81,67 +78,46 @@ object StreamingNearDup {
       .select($"pos".as("band"), $"col".as("bkey"), $"doc_id", $"sh")
       .as[(Int, Long, Long, Seq[Long])]
 
-    val fold = {
-        (key: (Int, Long), rows: Iterator[(Int, Long, Long, Seq[Long])],
-         state: GroupState[List[(Long, Long, Array[Long])]]) =>
-          val now = System.currentTimeMillis()
-          // lazy retention: prune members whose insertion fell out of
-          // the window before any comparison this batch
-          var bucket = state.getOption.getOrElse(Nil)
-          retention.foreach { d =>
-            val cutoff = now - d.toMillis
-            bucket = bucket.filter(_._2 >= cutoff)
-          }
-          val out = ArrayBuffer.empty[Pair]
-          rows.toSeq.sortBy(_._3).foreach { case (_, _, id, shSeq) =>
-            if (bucket.length >= maxBucket) throw new IllegalStateException(
-              s"StreamingNearDup: bucket (band=${key._1}, key=${key._2}) " +
-                s"exceeded $maxBucket members — a degenerate corpus is " +
-                "hashing into one bucket; widen the bands or pre-filter.")
-            val a = shSeq.toArray // sorted distinct (kernel contract)
-            bucket.foreach { case (pid, _, p) =>
-              // merge-count the intersection of two sorted arrays
-              var i = 0; var j = 0; var inter = 0
-              while (i < a.length && j < p.length) {
-                if (a(i) == p(j)) { inter += 1; i += 1; j += 1 }
-                else if (a(i) < p(j)) i += 1
-                else j += 1
-              }
-              val jac = math.floor(
-                inter * 10000.0 / (a.length + p.length - inter)).toLong
-              if (jac >= jaccardBp && pid != id)
-                out += Pair(math.min(id, pid), math.max(id, pid), jac)
-            }
-            bucket = (id, now, a) :: bucket
-          }
-          if (bucket.isEmpty) state.remove() else state.update(bucket)
-          out.iterator
-    }: ((Int, Long), Iterator[(Int, Long, Long, Seq[Long])],
-        GroupState[List[(Long, Long, Array[Long])]]) => Iterator[Pair]
-
-    val grouped = banded.groupByKey(r => (r._1, r._2))
-    bootstrapIndex match {
-      case None =>
-        grouped.flatMapGroupsWithState[List[(Long, Long, Array[Long])], Pair](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-      case Some(path) =>
-        // rebuild each bucket's member list from the persisted slim band
-        // rows + once-stored shingle sets (the saveIndex layout); one
-        // state row per (band, bucket) key, stamped at query start
-        val t0 = System.currentTimeMillis()
-        val members = spark.read.parquet(s"$path/bands")
-          .join(spark.read.parquet(s"$path/shingles"), "id")
-          .select($"band".cast("int"), $"bkey", $"id", $"sh")
-          .as[(Int, Long, Long, Seq[Long])]
-        val initial = members
-          .groupByKey(r => (r._1, r._2))
-          .mapGroups { (k, it) =>
-            (k, it.map(r => (r._3, t0, r._4.toArray)).toList)
-          }
-          .groupByKey(_._1)
-          .mapValues(_._2)
-        grouped.flatMapGroupsWithState[List[(Long, Long, Array[Long])], Pair](
-          OutputMode.Append(), GroupStateTimeout.NoTimeout(), initial)(fold)
+    // rebuild each bucket's member list from the persisted slim band rows
+    // + once-stored shingle sets (the saveIndex layout); one state row per
+    // (band, bucket) key, stamped at query start
+    val initial = bootstrapIndex.map { path =>
+      val t0 = System.currentTimeMillis()
+      spark.read.parquet(s"$path/bands")
+        .join(spark.read.parquet(s"$path/shingles"), "id")
+        .select($"band".cast("int"), $"bkey", $"id", $"sh")
+        .as[(Int, Long, Long, Seq[Long])]
+        .groupByKey(r => (r._1, r._2))
+        .mapGroups((k, it) => (k, it.map(r => (r._3, t0, r._4.toArray)).toList))
+        .groupByKey(_._1)
+        .mapValues(_._2)
+    }
+    KeyedFold(banded)(r => (r._1, r._2)).fold[List[(Long, Long, Array[Long])], Pair](
+        order = Some(Ordering.by(_._3)), initial = initial) { (key, prev, r, emit) =>
+      val (_, _, id, shSeq) = r
+      val now = System.currentTimeMillis()
+      // lazy retention: members whose insertion fell out of the window
+      // are pruned before any comparison
+      val members = prev.getOrElse(Nil)
+      val bucket = retention.fold(members)(d => members.filter(_._2 >= now - d.toMillis))
+      if (bucket.length >= maxBucket) throw new IllegalStateException(
+        s"StreamingNearDup: bucket (band=${key._1}, key=${key._2}) " +
+          s"exceeded $maxBucket members — a degenerate corpus is " +
+          "hashing into one bucket; widen the bands or pre-filter.")
+      val a = shSeq.toArray // sorted distinct (kernel contract)
+      bucket.foreach { case (pid, _, p) =>
+        // merge-count the intersection of two sorted arrays
+        var i = 0; var j = 0; var inter = 0
+        while (i < a.length && j < p.length) {
+          if (a(i) == p(j)) { inter += 1; i += 1; j += 1 }
+          else if (a(i) < p(j)) i += 1
+          else j += 1
+        }
+        val jac = math.floor(inter * 10000.0 / (a.length + p.length - inter)).toLong
+        if (jac >= jaccardBp && pid != id)
+          emit(Pair(math.min(id, pid), math.max(id, pid), jac))
+      }
+      (id, now, a) :: bucket
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sequence packing — the incremental twin of
   * x_pack_sequences: documents arrive as a stream already carrying
@@ -12,12 +11,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Contract matches the batch packer exactly: concat-and-chunk in
   * (shard, doc_id) order with a fixed token budget per training
-  * sequence. Within a micro-batch the group's documents are sorted by
-  * doc_id before folding on top of the carried offset; cross-batch
-  * ordering relies on ingest's monotone stamping (a shard's later docs
-  * arrive in later batches) — the same contract the live ordered folds
-  * assume. State is one Long per shard: bounded by shard count, not
-  * corpus size, at any scale.
+  * sequence, folded on top of the carried offset under the
+  * [[KeyedFold]] in-order contract (sorted by doc_id). State is one
+  * Long per shard: bounded by shard count, not corpus size, at any
+  * scale.
   */
 object StreamingPack {
 
@@ -27,23 +24,17 @@ object StreamingPack {
   /** docs: (shard, doc_id, n_tok). Emits one PackedDoc per input doc. */
   def pack(docs: DataFrame, budget: Long): Dataset[PackedDoc] = {
     import docs.sparkSession.implicits._
-    docs.select($"shard".cast("long"), $"doc_id".cast("long"),
+    val rows = docs.select($"shard".cast("long"), $"doc_id".cast("long"),
         $"n_tok".cast("long"))
       .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Long, PackedDoc](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (shard: Long, rows: Iterator[(Long, Long, Long)], state: GroupState[Long]) =>
-          var offset = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_._2).map { case (_, docId, nTok) =>
-            val seqId = offset / budget
-            val endTok = offset + math.max(nTok - 1, 0)
-            val crossing = nTok > 0 && endTok / budget > seqId
-            offset += nTok
-            PackedDoc(shard, docId, nTok, seqId, crossing)
-          }
-          state.update(offset)
-          out.iterator
-      }
+    KeyedFold(rows)(_._1).fold[Long, PackedDoc](
+        order = Some(Ordering.by(_._2))) { (shard, prev, r, emit) =>
+      val (_, docId, nTok) = r
+      val offset = prev.getOrElse(0L)
+      val seqId = offset / budget
+      val endTok = offset + math.max(nTok - 1, 0)
+      emit(PackedDoc(shard, docId, nTok, seqId, nTok > 0 && endTok / budget > seqId))
+      offset + nTok
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live path mining — the incremental twin of x_event_paths: per-user
   * event-type trigram paths emitted the moment the third event of a
@@ -12,11 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State per user is the LAST TWO event types — constant bytes,
   * independent of history length, the cheapest possible sessionization
   * state (the same two-row lookahead the batch query's lead() window
-  * holds per sort cursor, kept here across batches forever). In-order
-  * delivery per user is the same contract as
-  * the other live folds: a user's later events arrive in later batches
-  * or later within one, and each batch's group is sorted by
-  * (ts_ms, event_id) before folding.
+  * holds per sort cursor, kept here across batches forever), folded
+  * under the [[KeyedFold]] in-order contract sorted by
+  * (ts_ms, event_id).
   */
 object StreamingPaths {
 
@@ -27,22 +24,13 @@ object StreamingPaths {
   /** events: (user_id, ts_ms, event_id, event_type). */
   def paths(events: DataFrame): Dataset[PathHit] = {
     import events.sparkSession.implicits._
-    events.select("user_id", "ts_ms", "event_id", "event_type")
+    val rows = events.select("user_id", "ts_ms", "event_id", "event_type")
       .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[PathState, PathHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[PathState]) =>
-          var (a, b) = state.getOption.map(s => (s.a, s.b)).getOrElse((null: String, null: String))
-          val out = scala.collection.mutable.ArrayBuffer.empty[PathHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, _, _, t) =>
-            if (a != null && b != null) out += PathHit(uid, s"$a>$b>$t")
-            a = b
-            b = t
-          }
-          state.update(PathState(a, b))
-          out.iterator
-      }
+    KeyedFold(rows)(_._1).fold[PathState, PathHit](
+        order = Some(Ordering.by(r => (r._2, r._3)))) { (uid, prev, r, emit) =>
+      val s = prev.getOrElse(PathState(null, null))
+      if (s.a != null && s.b != null) emit(PathHit(uid, s"${s.a}>${s.b}>${r._4}"))
+      PathState(s.b, r._4)
+    }
   }
 }

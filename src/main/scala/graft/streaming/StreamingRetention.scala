@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live cohort retention — the incremental twin of x_retention: events
   * arrive as a stream; each user carries its cohort day (first-seen)
@@ -19,8 +18,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * funnel, retention needs NO delivery-order assumption within a
   * week: membership in a (user, week) is order-independent, and the
   * cohort day only needs the user's first batch to contain its
-  * earliest event — guaranteed by the same in-order ingest contract
-  * the other live folds document.
+  * earliest event — guaranteed by the [[KeyedFold]] in-order
+  * contract.
   */
 object StreamingRetention {
 
@@ -34,25 +33,18 @@ object StreamingRetention {
   /** events: (user_id, ms). Emits one WeekActive per new (user, week). */
   def activations(events: DataFrame): Dataset[WeekActive] = {
     import events.sparkSession.implicits._
-    events.select($"user_id".cast("long"), $"ms".cast("long"))
+    val rows = events.select($"user_id".cast("long"), $"ms".cast("long"))
       .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RetentionState, WeekActive](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[RetentionState]) =>
-          val days = rows.map(_._2 / 86400000L).toSeq
-          var s = state.getOption.getOrElse(
-            RetentionState(days.min, Seq.empty))
-          val seen = scala.collection.mutable.Set[Long](s.seen: _*)
-          val out = scala.collection.mutable.ArrayBuffer.empty[WeekActive]
-          days.sorted.foreach { day =>
-            val off = (day - s.cohortDay) / 7L
-            if (off >= 0 && seen.add(off))
-              out += WeekActive(user, s.cohortDay, off)
-          }
-          state.update(RetentionState(s.cohortDay, seen.toSeq.sorted))
-          out.iterator
-      }
+    // sorted by time, so a new user's first arrival carries its cohort day
+    KeyedFold(rows)(_._1).fold[RetentionState, WeekActive](
+        order = Some(Ordering.by(_._2))) { (user, prev, r, emit) =>
+      val day = r._2 / 86400000L
+      val s = prev.getOrElse(RetentionState(day, Seq.empty))
+      val off = (day - s.cohortDay) / 7L
+      if (off >= 0 && !s.seen.contains(off)) {
+        emit(WeekActive(user, s.cohortDay, off))
+        RetentionState(s.cohortDay, (s.seen :+ off).sorted)
+      } else s
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live twin of x_forecast_ses: a per-type simple-exponential-smoothing
   * level (α = 1/2) folded over the daily count stream as it closes —
@@ -15,13 +14,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * halving, so the live levels are bit-identical to the batch fold at
   * any batch split.
   *
-  * CONTRACT ENFORCEMENT (r17, the StreamingHoltWinters rule applied to
-  * its older sibling — this fold is NOT append-only-safe the way the
-  * existence twins are): the rollup contract is one CLOSED (type, day)
-  * row, non-decreasing in day per type; a cross-micro-batch reorder or
-  * a re-delivered closed row would silently and permanently corrupt
-  * the level, so every day ≤ lastDay arrival increments the
-  * accumulator [[levels]] returns and folds/emits NOTHING. */
+  * REORDERS (r17, the StreamingHoltWinters rule applied to its older
+  * sibling — this fold is NOT append-only-safe the way the existence
+  * twins are): the rollup contract is one CLOSED (type, day) row,
+  * non-decreasing in day per type; a cross-micro-batch reorder or a
+  * re-delivered closed row would silently and permanently corrupt the
+  * level, so every day ≤ lastDay arrival is a reorder under the
+  * [[KeyedFold]] in-order contract. */
 object StreamingSes {
 
   // CHECKPOINT BOUNDARY (r17 ADVICE): lastDay joined this state in
@@ -38,41 +37,26 @@ object StreamingSes {
       forecast: Double, abs_err: Double, level: Double)
 
   /** rollup: (event_type, day, n) with `day` = epoch-ms DIV 86400000.
-    * Returns the emission stream paired with its own in-order-contract
-    * accumulator (the [[StreamingGrowthAccounting.emissions]] pairing
-    * rule). */
+    * Returns the emission stream paired with its reorder accumulator. */
   def levels(rollup: DataFrame)
       : (Dataset[SesPoint], org.apache.spark.util.LongAccumulator) = {
     import rollup.sparkSession.implicits._
-    val oooAcc = rollup.sparkSession.sparkContext
-      .longAccumulator("graft.ses.outOfOrderArrivals")
-    val points = rollup
-      .select($"event_type", $"day".cast("long"), $"n".cast("long"))
+    val rows = rollup.select($"event_type", $"day".cast("long"), $"n".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SesState, SesPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[SesState]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SesPoint]
-          rows.toSeq.sortBy(_._2).foreach { case (_, day, n) =>
-            val x = n.toDouble
-            if (st == null) {
-              out += SesPoint(typ, day, n, x, 0.0, x)
-              st = SesState(x, 1L, day)
-            } else if (day > st.lastDay) {
-              val err = math.abs(x - st.level)
-              val lv = (st.level + x) / 2
-              out += SesPoint(typ, day, n, st.level, err, lv)
-              st = SesState(lv, st.nDays + 1, day)
-            } else {
-              oooAcc.add(1L) // reorder/duplicate: surfaced, never silent
-            }
-          }
-          state.update(st)
-          out.iterator
+    KeyedFold(rows)(_._1).foldInOrder[SesState, SesPoint](
+        "graft.ses.outOfOrderArrivals", Ordering.by(_._2))(
+        (st, r) => r._2 <= st.lastDay) { (typ, prev, r, emit) =>
+      val (_, day, n) = r
+      val x = n.toDouble
+      prev match {
+        case None =>
+          emit(SesPoint(typ, day, n, x, 0.0, x))
+          SesState(x, 1L, day)
+        case Some(st) =>
+          val lv = (st.level + x) / 2
+          emit(SesPoint(typ, day, n, st.level, math.abs(x - st.level), lv))
+          SesState(lv, st.nDays + 1, day)
       }
-    (points, oooAcc)
+    }
   }
 }

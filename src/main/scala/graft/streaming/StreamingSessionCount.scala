@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live session-count ladder — the 32nd streaming twin, incremental
   * over x_session_gap_sweep: each arrival emits one existence hit
@@ -17,12 +16,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per user is ONE long (the last event's epoch-ms) — the
   * cheapest state in the twin family alongside [[StreamingSes]].
-  * CONTRACT: per-user in-order delivery; an arrival with ms < lastMs
-  * is a cross-batch reorder whose gap pair the batch (which sorts)
-  * would have cut differently — it increments the accumulator
-  * [[emissions]] returns
-  * and emits nothing (parity is void under violation, loudly, never
-  * silently skewed — the growth twin's rule).
+  * CONTRACT: the [[KeyedFold]] in-order contract per user; an arrival
+  * with ms < lastMs is a cross-batch reorder whose gap pair the batch
+  * (which sorts) would have cut differently — it is counted in the
+  * accumulator [[emissions]] returns and emits nothing.
   *
   * At 100 TB: |users| longs of sharded state, one tiny hit per event,
   * calendar-free read-side rollup. */
@@ -33,35 +30,18 @@ object StreamingSessionCount {
   final case class SessHit(cls: String, gap_ms: Long)
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
-    * the hit stream paired with its own in-order-contract accumulator
-    * (the [[StreamingGrowthAccounting.emissions]] pairing rule —
-    * ADVICE r16: a global handle is last-writer-wins across
-    * concurrent streams in one JVM). */
+    * the hit stream paired with its own reorder accumulator
+    * ([[KeyedFold.Keyed.foldInOrder]]). */
   def emissions(events: DataFrame)
       : (Dataset[SessHit], org.apache.spark.util.LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.sessioncount.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[LastMs, SessHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[LastMs]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            if (st == null) {
-              out += SessHit("user", 0L); st = LastMs(ms)
-            } else if (ms >= st.ms) {
-              out += SessHit("gap", ms - st.ms); st = LastMs(ms)
-            } else oooAcc.add(1L) // reorder: surfaced, never silent
-          }
-          state.update(st)
-          out.iterator
-      }
-    (hits, oooAcc)
+    val rows = events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)]
+    KeyedFold(rows)(_._1).foldInOrder[LastMs, SessHit](
+        "graft.sessioncount.outOfOrderArrivals", Ordering.by(r => (r._2, r._3)))(
+        (st, r) => r._2 < st.ms) { (_, prev, r, emit) =>
+      emit(prev.fold(SessHit("user", 0L))(st => SessHit("gap", r._2 - st.ms)))
+      LastMs(r._2)
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live rate-spike detection — the incremental twin of x_spike_detect:
   * hourly (event_type, hour, n) rollups arrive as a stream (the
@@ -26,29 +25,21 @@ object StreamingSpike {
       trail_sum: Long, trail_cnt: Long)
 
   /** rollup: (event_type, hour, n) with `hour` = epoch-ms DIV 3600000.
-    * In-order delivery per type (a type's later hours arrive in later
-    * batches or later within the batch — same contract as the other
-    * live folds; within a batch the group is sorted by hour). */
+    * Folded under the [[KeyedFold]] in-order contract per type, sorted
+    * by hour. */
   def flags(rollup: DataFrame): Dataset[SpikeFlag] = {
     import rollup.sparkSession.implicits._
-    rollup.select($"event_type", $"hour".cast("long"), $"n".cast("long"))
+    val rows = rollup.select($"event_type", $"hour".cast("long"), $"n".cast("long"))
       .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SpikeState, SpikeFlag](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (typ: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[SpikeState]) =>
-          var counts = state.getOption.map(_.counts).getOrElse(Seq.empty)
-          val out = scala.collection.mutable.ArrayBuffer.empty[SpikeFlag]
-          rows.toSeq.sortBy(_._2).foreach { case (_, hour, n) =>
-            val cnt = counts.length.toLong
-            val sum = counts.sum
-            if (cnt >= 3 && n * cnt * 2 > sum * 3)
-              out += SpikeFlag(typ, hour * 3600000L, n, sum, cnt)
-            counts = (counts :+ n).takeRight(6)
-          }
-          state.update(SpikeState(counts))
-          out.iterator
-      }
+    KeyedFold(rows)(_._1).fold[SpikeState, SpikeFlag](
+        order = Some(Ordering.by(_._2))) { (typ, prev, r, emit) =>
+      val (_, hour, n) = r
+      val counts = prev.fold(Seq.empty[Long])(_.counts)
+      val cnt = counts.length.toLong
+      val sum = counts.sum
+      if (cnt >= 3 && n * cnt * 2 > sum * 3)
+        emit(SpikeFlag(typ, hour * 3600000L, n, sum, cnt))
+      SpikeState((counts :+ n).takeRight(6))
+    }
   }
 }

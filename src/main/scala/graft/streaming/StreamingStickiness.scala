@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live DAU/WAU stickiness — the 28th streaming twin, incremental over
   * x_stickiness: as events arrive, each user's FIRST event on a new
@@ -21,13 +20,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * week-level weight. Week = day DIV 7, day = ms DIV 86400000 — the
   * batch query's own integer arithmetic on nonnegative epochs.
   *
-  * CONTRACT ENFORCEMENT (the [[StreamingGrowthAccounting]] rule): an
-  * arrival with w < wk — a cross-micro-batch reorder into a PRIOR
-  * week — may carry an uncounted (user, day) and silently undercount
-  * DAU/WAU relative to batch; the two-long state cannot tell. Every
-  * such arrival increments the accumulator [[emissions]] returns:
-  * zero ⇒ the parity
-  * guarantee held; nonzero ⇒ the contract was violated, loudly.
+  * REORDERS (the [[StreamingGrowthAccounting]] rule): an arrival with
+  * w < wk — a cross-micro-batch reorder into a PRIOR week — may carry
+  * an uncounted (user, day) and silently undercount DAU/WAU relative
+  * to batch; the two-long state cannot tell, so every such arrival is
+  * a reorder under the [[KeyedFold]] in-order contract.
   *
   * At 100 TB: state is |users| × two longs sharded by the state
   * store; emissions are ≤ one tiny row per (user, day); the read-side
@@ -39,43 +36,31 @@ object StreamingStickiness {
   final case class StickHit(cls: String, idx: Long)
 
   /** events: (user_id, ts_ms, event_id) — ts as epoch millis. Returns
-    * the hit stream paired with its own in-order-contract accumulator
-    * (the [[StreamingGrowthAccounting.emissions]] pairing rule —
-    * ADVICE r16: a global handle is last-writer-wins across
-    * concurrent streams in one JVM). */
+    * the hit stream paired with its own reorder accumulator
+    * ([[KeyedFold.Keyed.foldInOrder]]). */
   def emissions(events: DataFrame)
       : (Dataset[StickHit], org.apache.spark.util.LongAccumulator) = {
     import events.sparkSession.implicits._
-    val oooAcc = events.sparkSession.sparkContext
-      .longAccumulator("graft.stickiness.outOfOrderArrivals")
-    val hits = events.select("user_id", "ts_ms", "event_id")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[WeekMask, StickHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long)],
-         state: GroupState[WeekMask]) =>
-          var st = state.getOption.orNull
-          val out = scala.collection.mutable.ArrayBuffer.empty[StickHit]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ms, _) =>
-            val day = ms / 86400000L
-            val w = day / 7L
-            val bit = 1L << (day % 7L)
-            if (st == null || w > st.wk) {
-              out += StickHit("dau", day)
-              out += StickHit("wau", w)
-              st = WeekMask(w, bit)
-            } else if (w == st.wk) {
-              if ((st.mask & bit) == 0L) {
-                out += StickHit("dau", day)
-                st = st.copy(mask = st.mask | bit)
-              }
-            } else oooAcc.add(1L) // w < wk: cross-batch reorder, surfaced
+    val rows = events.select("user_id", "ts_ms", "event_id").as[(Long, Long, Long)]
+    KeyedFold(rows)(_._1).foldInOrder[WeekMask, StickHit](
+        "graft.stickiness.outOfOrderArrivals", Ordering.by(r => (r._2, r._3)))(
+        (st, r) => r._2 / 86400000L / 7L < st.wk) { (_, prev, r, emit) =>
+      val day = r._2 / 86400000L
+      val w = day / 7L
+      val bit = 1L << (day % 7L)
+      prev match {
+        case Some(st) if w == st.wk =>
+          if ((st.mask & bit) != 0L) st
+          else {
+            emit(StickHit("dau", day))
+            st.copy(mask = st.mask | bit)
           }
-          state.update(st)
-          out.iterator
+        case _ => // a new user or a later week
+          emit(StickHit("dau", day))
+          emit(StickHit("wau", w))
+          WeekMask(w, bit)
       }
-    (hits, oooAcc)
+    }
   }
 
   /** Fold a table of emissions into the batch query's full output

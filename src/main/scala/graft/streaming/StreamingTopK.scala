@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.FreqItems
 
@@ -45,22 +44,19 @@ object StreamingTopK {
   def candidates(tokens: DataFrame, buckets: Int = 16, k: Int = 64): Dataset[Cand] = {
     import tokens.sparkSession.implicits._
     val mg = FreqItems.MG(k)
-    tokens
+    val rows = tokens
       .select(pmod(xxhash64(col("token")), lit(buckets)).cast("int").as("bucket"),
         col("token"))
       .as[(Int, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[TopKState, Cand](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (bucket: Int, rows: Iterator[(Int, String)],
-         state: GroupState[TopKState]) =>
-          val prior = state.getOption.getOrElse(TopKState(Map.empty, 0L, 0L))
-          var buf = FreqItems.MGBuf(prior.counters, prior.total)
-          rows.foreach { case (_, tok) => buf = mg.reduce(buf, tok) }
-          val gen = prior.gen + 1L
-          state.update(TopKState(buf.counters, buf.total, gen))
-          buf.counters.iterator
-            .map { case (t, c) => Cand(bucket, gen, t, c, buf.total) }
-      }
+    KeyedFold(rows)(_._1).fold[TopKState, Cand](
+        summary = { (bucket, before, st, emit) =>
+          val gen = before.fold(0L)(_.gen) + 1L
+          st.counters.foreach { case (t, c) => emit(Cand(bucket, gen, t, c, st.total)) }
+          st.copy(gen = gen)
+        }) { (_, prev, r, _) =>
+      val p = prev.getOrElse(TopKState(Map.empty, 0L, 0L))
+      val buf = mg.reduce(FreqItems.MGBuf(p.counters, p.total), r._2)
+      TopKState(buf.counters, buf.total, p.gen)
+    }
   }
 }

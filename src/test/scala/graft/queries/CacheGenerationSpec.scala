@@ -58,6 +58,29 @@ class CacheGenerationSpec extends AnyFunSuite with SparkTestBase {
       "a warm serve was charged as a build — only executed thunks may record")
   }
 
+  test("a build that throws is not charged: its retry leaves exactly one " +
+      "charge, the retry's own run") {
+    val artifact = s"throwonce${System.nanoTime()}"
+    def recorded: Option[Double] =
+      Option(QueryModule.buildTimes.get(artifact)).map(_.doubleValue)
+    // the Box retries the SAME thunk, so it throws on its first run only
+    var runs = 0
+    def build(): String = {
+      runs += 1
+      if (runs == 1) { Thread.sleep(300); throw new IllegalStateException("first build fails") }
+      "built"
+    }
+    intercept[IllegalStateException](
+      QueryModule.cachedLocal(s"$artifact:dir", "gen1")(build()))
+    assert(recorded.isEmpty, "a build that threw was charged to buildTimes")
+    val t0 = System.nanoTime()
+    assert(QueryModule.cachedLocal(s"$artifact:dir", "gen1")(build()) == "built")
+    val retryWall = (System.nanoTime() - t0) / 1e9
+    assert(runs == 2)
+    assert(recorded.exists(c => c > 0.0 && c <= retryWall),
+      s"charged $recorded for a retry that took $retryWall s")
+  }
+
   test("cachedIndex regeneration drill: a regenerated documents table " +
       "rebuilds the persisted near-dup pair list (r14 artifact class)") {
     // r14 moved corpus-derived artifacts (ngramPairs, the oracle-twin
